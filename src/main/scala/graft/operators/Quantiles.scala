@@ -3,8 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
+import java.lang.Double.isFinite
+import java.math.{BigDecimal => JBD, RoundingMode}
 import scala.collection.mutable
 
 /** Exact interpolated quantiles WITHOUT the linear-memory value buffer of
@@ -13,18 +15,33 @@ import scala.collection.mutable
   * partition and merges them; at 10^12 rows of a high-cardinality double
   * that map IS the dataset). Two scale-safe exact strategies instead:
   *
-  *  - [[percentiles]] (global, unbounded domain): iteratively refined
-  *    histogram brackets. Pass 1 computes (n, min, max); each refinement
-  *    pass histograms the current bracket into `bins` equal-width bins
-  *    (one column scan, ≤`bins` result rows), walks the cumulative counts
-  *    to the bin holding the target rank, and narrows the bracket to that
-  *    bin; a bracket whose population fits `leafLimit` is resolved exactly
-  *    from its sorted value counts. Executor memory is O(bins) per task,
-  *    driver traffic is O(bins + leafLimit) rows per pass — independent of
-  *    n. Range shrinks `bins`× per pass, so 10^12 uniform rows resolve in
-  *    3 passes; the ulp guard below bounds the pathological case. Each
-  *    pass carries a value-range conjunct, so parquet min/max stats prune
-  *    row groups on the narrowed re-scans.
+  *  - Global selection ([[percentiles]], [[exact]], [[medianAndMad]];
+  *    unbounded domain): one log-bucket kernel.
+  *     1. Pass 1 needs no prior stats scan: rows bucket by a SCALE-FREE
+  *        log bucket id (64 buckets per octave of |v|, sign-aware), so at
+  *        most ~131k buckets exist over the entire double range, each
+  *        collected as (cnt, min, max). Walking the cumulative counts
+  *        locates the bucket holding each target rank.
+  *     2. A rank whose span holds more than `leafLimit` rows narrows: each
+  *        narrowing pass filters the span's plain value range (parquet
+  *        min/max stats prune row groups), splits it into 4096 equal-
+  *        width bins, collects (cnt, min, max) per occupied bin and keeps
+  *        the bin holding the rank — until the span fits `leafLimit` or
+  *        holds one value, within the pass bound derived at
+  *        [[MaxNarrowPasses]].
+  *     3. One tagged region scan value-counts the rows inside the rank
+  *        spans (the leaves) and only counts — or, for [[Winsorize]],
+  *        decimal-sums — the rows between them; the order statistics
+  *        read off the leaf value counts.
+  *    Executor memory is O(buckets) per task and driver traffic
+  *    O(buckets + leafLimit) rows per pass, independent of n. On data
+  *    whose rank buckets fit `leafLimit` (any fixed-precision domain at
+  *    bench scale) that is two jobs. Each pass picks its aggregation by
+  *    input width: ≤64 partitions (the single-node / per-shard case) fold
+  *    per partition and merge on the driver, without the exchange's fixed
+  *    scheduling cost; wider inputs groupBy through an exchange, so the
+  *    driver's fan-in stays bounded by the bucket count, not task count.
+  *    Non-finite values and empty input raise IllegalArgumentException.
   *
   *  - [[grouped]] (per group, bounded-cardinality domain — token counts,
   *    fixed-precision decimals): shrink to exact value counts first
@@ -114,290 +131,405 @@ object Quantiles {
       .select(sel: _*)
   }
 
+
   /** Exact interpolated global quantiles of `value` at probabilities `ps`,
-    * driver-coordinated histogram-bracket selection (doc above). The
-    * returned doubles are bit-identical to `percentile(value, p)`.
-    *
-    * `reuse` (default on) persists the projected single-double column for
-    * the duration of the call, so the stats pass + every refinement pass
-    * share ONE source read instead of re-decoding parquet per pass — the
-    * 3-4× constant factor the r11 bench flagged on a11_winsorize. Cached
-    * batches keep min/max stats, so narrowed passes still prune in-memory
-    * partitions the way the uncached arm prunes row groups. Set it false
-    * when the column exceeds the cluster's cache budget (the extreme-scale
-    * arm — then each pass's range conjunct reaches the parquet reader and
-    * row-group stats do the pruning; QuantilesSpec audits that path).
+    * bit-identical to `percentile(value, p)`. No persist: the kernel reads
+    * the source twice unless a rank needs narrowing, and building the
+    * in-memory columnar cache measures ~2× the cost of the second pruned-
+    * column decode (r13 probe at sf1).
     */
   def percentiles(df: DataFrame, value: String, ps: Seq[Double],
-      bins: Int = 4096, leafLimit: Long = 1L << 16,
-      reuse: Boolean = true): Seq[Double] = {
-    val base0 = projected(df, value)
-    val base = if (reuse)
-      base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else base0
-    try percentilesPrepared(base, ps, bins, leafLimit)
-    finally if (reuse) base.unpersist(blocking = false)
-  }
+      leafLimit: Long = 1L << 16): Seq[Double] =
+    exact(projected(df, value), ps, leafLimit = leafLimit)._1
 
-  /** The single-double-column projection every pass of the machinery
-    * scans: callers composing SEVERAL quantile rounds over one column
-    * (MAD, winsorize, spike thresholds, approx-vs-exact gates) should
-    * `prepared(...)` this ONCE and hand it to [[percentilesPrepared]] /
-    * [[statsOf]] — otherwise each round re-decodes the source parquet,
-    * the 3-4× constant factor the r12 sf1 bench measured on a14/a19.
+  /** The single-double-column `__v` projection every kernel pass scans.
+    * Callers composing several reads over one column (a sketch plus an
+    * exact gate) project once and hand it to [[exact]] / [[medianAndMad]].
     */
   def projected(df: DataFrame, value: String): DataFrame =
     df.select(col(value).cast(DoubleType).as("__v"))
       .filter(col("__v").isNotNull)
 
-  /** [[projected]], persisted for cross-round reuse. The caller owns the
-    * unpersist (or leaves it to the harness's between-query cleanup when
-    * the RETURNED frame still references the cache).
+  /** Exact interpolated quantiles of a [[projected]] frame at `ps` — and
+    * the exact rank `count(v <= x)` of every probe value x, from the SAME
+    * region scan (the rank of a GK estimate is what the a19 gate needs).
+    * Returns (quantiles in `ps` order, probe ranks in `probes` order, row
+    * count). Quantiles are RAW; callers round.
     */
-  def prepared(df: DataFrame, value: String): DataFrame =
-    projected(df, value)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def exact(base: DataFrame, ps: Seq[Double], probes: Seq[Double] = Nil,
+      leafLimit: Long = 1L << 16): (Seq[Double], Seq[Long], Long) = {
+    require(ps.nonEmpty && ps.forall(p => p >= 0 && p <= 1), "p in [0,1]")
+    require(probes.forall(isFinite), "finite probes")
+    val x = locate(base, "quantiles of empty input")
+    // a probe's leaf is the point [v, v]: the regions before it hold
+    // exactly the rows < v, and it collects at most one distinct value
+    val leaves = mergeIntervals(
+      ps.map(x.leaf(_, leafLimit)) ++ probes.map(v => (v, v)))
+    val r = x.scan(leaves, needSums = false)
+    val ranks = probes.map { v =>
+      val t = 2 * leaves.indexWhere(l => v >= l._1 && v <= l._2) + 1
+      r.before(t) + r.leafEntries(t).filter(_._1 <= v).map(_._2).sum
+    }
+    (ps.map(interpolate(_, x.n, r.valueAt)), ranks, x.n)
+  }
 
-  /** One (count, min, max) pass over a [[projected]] frame — the stats
-    * that seed the bracket machinery. Exposed so multi-round callers can
-    * DERIVE the next round's bounds instead of paying a fresh stats scan:
-    * |x − med| over x ∈ [mn, mx] is bounded by [0, max(mx−med, med−mn)]
-    * (IEEE subtraction is monotone), and the row count is unchanged by a
-    * null-free narrow map.
+  /** Median and median absolute deviation of a [[projected]] frame in
+    * three jobs when no rank span needs narrowing: one bucket histogram
+    * and one region scan per round. The deviation round needs NO second
+    * histogram — the x-space buckets map driver-side into |x − med| space
+    * (a bucket entirely on one side of `med` maps monotonically; a
+    * straddling bucket maps to [0, max distance]; counts carry over
+    * exactly and IEEE subtraction's monotone rounding keeps every value
+    * inside its mapped interval), so the deviation rank locates in
+    * metadata. `snapMedian` is applied to the interpolated median BEFORE
+    * the deviation round (a14's contract snaps to the round-6 gate grid
+    * so both engines see bit-identical deviation inputs). Returns (snapped
+    * median, raw MAD).
     */
-  def statsOf(base: DataFrame): (Long, Double, Double) = {
-    val st = base.agg(count(lit(1)), min(col("__v")), max(col("__v"))).head()
-    val n = st.getLong(0)
-    require(n > 0, "percentile of empty input")
-    val mn = st.getDouble(1); val mx = st.getDouble(2)
+  def medianAndMad(base: DataFrame,
+      snapMedian: Double => Double = identity,
+      leafLimit: Long = 1L << 16): (Double, Double) = {
+    def median(x: Located): Double = {
+      val r = x.scan(Seq(x.leaf(0.5, leafLimit)), needSums = false)
+      interpolate(0.5, x.n, r.valueAt)
+    }
+    val x = locate(base, "median of empty input")
+    val med = snapMedian(median(x))
+    val dev = x.buckets.map { b =>
+      if (b.hi <= med) Bucket(med - b.hi, med - b.lo, b.cnt)
+      else if (b.lo >= med) Bucket(b.lo - med, b.hi - med, b.cnt)
+      else Bucket(0.0, math.max(med - b.lo, b.hi - med), b.cnt)
+    }
+    (med, median(new Located(base.select(abs(col("__v") - med).as("__v")),
+      mergedBuckets(dev), x.fewParts)))
+  }
+
+  /** Percentile's interpolation at probability p over n rows, reading the
+    * order statistics from `at` (0-indexed rank → value).
+    */
+  private[operators] def interpolate(p: Double, n: Long,
+      at: Long => Double): Double = {
+    val pos = p * (n - 1)
+    val lo = math.floor(pos).toLong; val hi = math.ceil(pos).toLong
+    if (lo == hi) at(lo) else (hi - pos) * at(lo) + (pos - lo) * at(hi)
+  }
+
+  /** Scale-free bucket id: 0 for ±0, else sign-aware 64-per-octave log
+    * bucket offset to keep negatives < 0-bucket < positives. The SQL and
+    * JVM forms evaluate the same StrictMath operations (Spark's log2 is
+    * StrictMath.log(x) / StrictMath.log(2)), so both arms bucket a value
+    * identically; non-finite inputs land in extreme buckets where
+    * [[locate]]'s finiteness check rejects them.
+    */
+  private def bucketId(v: Column): Column = {
+    def mag(x: Column) =
+      floor(least(greatest(log2(x) * 64.0, lit(-1e9)), lit(1e9)))
+    when(v === 0.0, lit(0L))
+      .when(v > 0.0, mag(v) + (1L << 40))
+      .otherwise(-mag(-v) - (1L << 40))
+  }
+
+  private def bucketIdJvm(v: Double): Long = {
+    def mag(x: Double) = math.floor(math.min(math.max(
+      StrictMath.log(x) / StrictMath.log(2) * 64.0, -1e9), 1e9)).toLong
+    if (v == 0.0) 0L
+    else if (v > 0.0) mag(v) + (1L << 40)
+    else -mag(-v) - (1L << 40)
+  }
+
+  private val Bins = 4096
+
+  /** Equal-width bin of v in [lo, hi] (lo < hi, one log bucket, so hi − lo
+    * is finite); the division comes first so a subnormal span cannot
+    * underflow the bin width.
+    */
+  private def binJvm(lo: Double, hi: Double)(v: Double): Long =
+    math.min(math.floor((v - lo) / (hi - lo) * Bins), Bins - 1.0).toLong
+
+  private def binSql(lo: Double, hi: Double)(v: Column): Column =
+    least(floor((v - lo) / (hi - lo) * Bins), lit(Bins - 1L))
+
+  /** Narrowing passes per rank, at most. A span wider than one log bucket
+    * first re-buckets by log id — only deviation-space spans are: their
+    * buckets are mapped from x space, not histogrammed, and overlapping
+    * ones merge. A span inside one log bucket lies on one side of zero
+    * with |hi| / |lo| (or the reverse) < 2^(1/64), so its width is under
+    * (2^(1/64) − 1) · 2^53 < 2^47 steps of its smallest ulp. Each equal-
+    * width pass keeps one bin, 2^-12 of that width, so after four passes
+    * the span is narrower than half an ulp: one value. 1 + 4 = 5.
+    */
+  private val MaxNarrowPasses = 5
+
+  private[operators] final case class Bucket(lo: Double, hi: Double, cnt: Long)
+
+  /** (cnt, min, max) per occupied key of `frame`'s `__v`, both arms. */
+  private def histogram(frame: DataFrame, fewParts: Boolean,
+      keyJvm: Double => Long, keySql: Column => Column): Array[Bucket] =
+    if (fewParts) {
+      import frame.sparkSession.implicits._
+      frame.as[Double].mapPartitions { it =>
+        val m = mutable.LongMap.empty[(Long, Double, Double)]
+        it.foreach { v =>
+          val b = keyJvm(v)
+          m.get(b) match {
+            case Some((c, lo, hi)) =>
+              // math.min/max propagate NaN, so a NaN surfaces in the
+              // bucket bounds for the finiteness check
+              m.update(b, (c + 1, math.min(lo, v), math.max(hi, v)))
+            case None => m.update(b, (1L, v, v))
+          }
+        }
+        m.iterator.map { case (b, (c, lo, hi)) => (b, c, lo, hi) }
+      }.collect()
+        .groupBy(_._1).values
+        .map(g => Bucket(g.map(_._3).min, g.map(_._4).max, g.map(_._2).sum))
+        .toArray
+    } else
+      frame.groupBy(keySql(col("__v")).as("b"))
+        .agg(count(lit(1)).as("c"), min("__v").as("lo"), max("__v").as("hi"))
+        .collect()
+        .map(r => Bucket(r.getDouble(2), r.getDouble(3), r.getLong(1)))
+
+  /** Sort + merge value-overlapping buckets (deviation-space buckets
+    * overlap; histogram keys are monotone, so theirs never do).
+    */
+  private def mergedBuckets(raw: Array[Bucket]): Array[Bucket] = {
+    val sorted = raw.sortBy(_.lo)
+    sorted.tail.foldLeft(List(sorted.head)) { (acc, b) =>
+      if (b.lo <= acc.head.hi)
+        Bucket(acc.head.lo, math.max(acc.head.hi, b.hi),
+          acc.head.cnt + b.cnt) :: acc.tail
+      else b :: acc
+    }.reverse.toArray
+  }
+
+  /** Pass 1: the log-bucket histogram of a [[projected]] frame. */
+  private[operators] def locate(base: DataFrame, emptyMsg: String): Located = {
+    val fewParts = base.rdd.getNumPartitions <= 64
+    val raw = histogram(base, fewParts, bucketIdJvm, bucketId)
+    if (raw.isEmpty) throw new IllegalArgumentException(emptyMsg)
     // Spark orders NaN above every double, so max() surfaces any NaN in
     // the column; ±Inf surfaces as the min/max itself. Neither has a
     // cross-engine percentile semantics worth chasing (DuckDB and Spark
-    // already disagree on them), and both would poison the bracket
+    // already disagree on them), and both would poison the span
     // arithmetic — reject loudly instead of returning garbage.
-    require(!mx.isNaN && !mn.isInfinity && !mx.isInfinity,
-      s"percentiles: non-finite values in the column (min=$mn, max=$mx) — " +
-        "filter NaN/Inf out first; their ordering is engine-specific")
-    (n, mn, mx)
-  }
-
-  /** Exact interpolated quantiles over a [[projected]] (ideally
-    * [[prepared]]) frame, minimum job count: the 2-job log-bucket arm
-    * ([[Winsorize.exactQuantiles]] — stats-free histogram + one tagged
-    * leaf scan) whenever the data allows, else the refine-until-leafLimit
-    * machinery below. Bit-identical results in both arms (same order
-    * statistics, same interpolation expression).
-    */
-  def exact(base: DataFrame, ps: Seq[Double]): Seq[Double] =
-    Winsorize.exactQuantiles(base, ps).map(_._1)
-      .getOrElse(percentilesPrepared(base, ps))
-
-  /** [[exact]] over a named column. No persist: at two scans, building
-    * the in-memory columnar cache measures ~2× the cost of the second
-    * pruned-column decode (r13 probe at sf1).
-    */
-  def exactCol(df: DataFrame, value: String, ps: Seq[Double]): Seq[Double] =
-    exact(projected(df, value), ps)
-
-  /** Exact interpolated quantiles over a [[projected]] (ideally
-    * [[prepared]]) frame. `known` short-circuits the stats pass with
-    * bounds the caller already holds — they need NOT be tight (loose
-    * bounds only waste empty histogram bins), but must contain every
-    * value, count exactly, and be finite.
-    */
-  def percentilesPrepared(base: DataFrame, ps: Seq[Double],
-      bins: Int = 4096, leafLimit: Long = 1L << 16,
-      known: Option[(Long, Double, Double)] = None): Seq[Double] = {
-    require(ps.forall(p => p >= 0 && p <= 1), "p in [0,1]")
-    require(bins >= 2 && bins <= (1 << 20),
-      "bins in [2, 2^20] (bin ids must stay exactly double-representable)")
-    val (n, mn, mx) = known.getOrElse(statsOf(base))
-    val ranks = ps.flatMap { p =>
-      val pos = p * (n - 1)
-      Seq(math.floor(pos).toLong, math.ceil(pos).toLong)
-    }.distinct
-    val at = valuesAtRanks(base, n, mn, mx, ranks, bins, leafLimit)
-    ps.map { p =>
-      val pos = p * (n - 1)
-      val lo = math.floor(pos).toLong; val hi = math.ceil(pos).toLong
-      if (lo == hi) at(lo)
-      else (hi - pos) * at(lo) + (pos - lo) * at(hi) // Percentile's formula
+    if (!raw.forall(b => isFinite(b.lo) && isFinite(b.hi))) {
+      val mn = raw.map(_.lo).reduce(math.min(_, _))
+      val mx = raw.map(_.hi).reduce(math.max(_, _))
+      throw new IllegalArgumentException(
+        s"percentiles: non-finite values in the column (min=$mn, max=$mx) — " +
+          "filter NaN/Inf out first; their ordering is engine-specific")
     }
+    new Located(base, mergedBuckets(raw), fewParts)
   }
 
-  /** Bracket state: `pred` selects EXACTLY this bracket's rows (membership
-    * is the conjunction of the bin-assignment expressions that produced
-    * it — never a re-derived float range, which can disagree at bin edges
-    * by one ulp); [lo, hi] is the value range (for bin arithmetic and the
-    * pushdown-friendly range conjunct); `offset` is the 0-indexed rank
-    * within the bracket; `cnt` its exact population.
+  /** A `__v` frame with disjoint, value-ordered buckets that count every
+    * row exactly: pass 1's histogram, or one derived from it.
     */
-  private final case class Bracket(
-      pred: Column, lo: Double, hi: Double, offset: Long, cnt: Long)
+  private[operators] final class Located(frame: DataFrame,
+      val buckets: Array[Bucket], val fewParts: Boolean) {
+    private val cum = buckets.scanLeft(0L)(_ + _.cnt)
+    val n: Long = cum.last
+    // narrowing histograms by span: a quantile's floor and ceil ranks
+    // usually share their spans, and pay each pass once
+    private val narrowed = mutable.HashMap.empty[(Double, Double), Array[Bucket]]
 
-  /** Per-bin width, overflow-safe: (hi − lo) exceeds Double.MaxValue when
-    * a bracket spans huge values of both signs, so divide endpoints first
-    * in that regime. Finite whenever lo/hi are (which percentiles()
-    * enforces).
-    */
-  private def width(lo: Double, hi: Double, bins: Int): Double = {
-    val r = hi - lo
-    if (r.isInfinity) hi / bins - lo / bins else r / bins
-  }
-
-  /** Bin edge `lo + w·bin` without the w·bin overflow on astronomically
-    * wide brackets (endpoint interpolation keeps every intermediate
-    * within ±max(|lo|, |hi|)).
-    */
-  private def edge(lo: Double, hi: Double, bins: Int, bin: Long): Double =
-    if ((hi - lo).isInfinity) lo / bins * (bins - bin) + hi / bins * bin
-    else lo + (hi - lo) / bins * bin
-
-  /** The bin-assignment expression for a bracket. In the overflow regime
-    * (v − lo) is as unsafe as (hi − lo), so the division distributes;
-    * otherwise the plain form (numerically tighter once brackets are
-    * narrow — the dominant case after pass 1). Only internal consistency
-    * matters: the SAME expression assigns the histogram bin and later
-    * selects the bin's members, so rounding can never disagree with
-    * itself.
-    */
-  private def binExpr(v: Column, b: Bracket, bins: Int): Column = {
-    val w = width(b.lo, b.hi, bins)
-    val raw =
-      if ((b.hi - b.lo).isInfinity) floor(v / w - b.lo / w)
-      else floor((v - b.lo) / w)
-    least(greatest(raw, lit(0L)), lit((bins - 1).toLong)).cast(IntegerType)
-  }
-
-  private def valuesAtRanks(base: DataFrame, n: Long, mn: Double,
-      mx: Double, ranks: Seq[Long], bins: Int, leafLimit: Long)
-      : Map[Long, Double] = {
-    val v = col("__v")
-    val out = mutable.Map[Long, Double]()
-    var active: Seq[(Long, Bracket)] = ranks.map { k =>
-      require(k >= 0 && k < n, s"rank $k out of [0, $n)")
-      k -> Bracket(v >= mn && v <= mx, mn, mx, k, n)
+    /** (lo, hi, population, rows below lo) of the bucket holding rank k. */
+    private def rankSpan(k: Long, bs: Array[Bucket], cm: Array[Long])
+        : (Double, Double, Long, Long) = {
+      val i = java.util.Arrays.binarySearch(cm, k)
+      val at = if (i >= 0) i else -i - 2 // cm(at) <= k < cm(at+1)
+      require(at >= 0 && at < bs.length, s"rank $k out of [0, $n)")
+      (bs(at).lo, bs(at).hi, bs(at).cnt, cm(at))
     }
-    var pass = 0
-    while (active.nonEmpty) {
-      pass += 1
-      // a bracket leafs when its population collects safely, when every
-      // value is identical, or when a bin narrows below one ulp (the
-      // histogram can no longer split it, but then it holds ≤ bins+1
-      // distinct doubles, so the distinct-leaf stays bounded); the pass
-      // cap is a pure backstop — the range shrinks bins× per pass, so 40
-      // passes out-divide the entire double dynamic range
-      val (leaf, refine) = active.partition { case (_, b) =>
-        b.cnt <= leafLimit || b.lo == b.hi || pass > 40 ||
-          width(b.lo, b.hi, bins) <=
-            math.ulp(math.max(math.abs(b.lo), math.abs(b.hi)))
+
+    /** Value span holding rank k, narrowed until it holds ≤ `leafLimit`
+      * rows or one value. Bucket bounds are ACTUAL min/max values, so
+      * `v >= lo && v <= hi` selects exactly the span's rows.
+      */
+    private def rankLeaf(k: Long, leafLimit: Long): (Double, Double) = {
+      var (lo, hi, cnt, below) = rankSpan(k, buckets, cum)
+      var pass = 0
+      while (cnt > leafLimit && lo < hi) {
+        require(pass < MaxNarrowPasses,
+          s"rank $k: span [$lo, $hi] holds $cnt rows after $pass passes")
+        pass += 1
+        val (l, h) = (lo, hi)
+        val bins = narrowed.getOrElseUpdate((l, h), mergedBuckets {
+          val span = frame.filter(col("__v") >= l && col("__v") <= h)
+          if (bucketIdJvm(l) == bucketIdJvm(h))
+            histogram(span, fewParts, binJvm(l, h), binSql(l, h))
+          else histogram(span, fewParts, bucketIdJvm, bucketId)
+        })
+        val total = bins.map(_.cnt).sum
+        require(total == cnt,
+          s"pass disagreement: span [$l, $h] counted $cnt, narrowed $total")
+        val next = rankSpan(k, bins, bins.scanLeft(below)(_ + _.cnt))
+        lo = next._1; hi = next._2; cnt = next._3; below = next._4
       }
-      // brackets for nearby ranks coincide (p01's floor/ceil ranks, both
-      // tails on the first pass) — dedup them; DISTINCT brackets are
-      // pairwise disjoint by construction (identical parents dedup, and
-      // children of one parent are different bins), so EVERY bracket at
-      // this pass — leaf value-counts and refinement histograms alike —
-      // shares ONE tagged scan, keyed by the value for leaf tags and the
-      // (exactly double-representable) bin id for refine tags: at 100 TB
-      // a pass costs one column read however many quantiles are in
-      // flight and whatever stage each has reached.
-      val leafGroups = leaf.groupBy { case (_, b) => (b.lo, b.hi, b.cnt) }
-        .values.toSeq
-      val (constGroups, scanGroups) =
-        leafGroups.partition(g => g.head._2.lo == g.head._2.hi)
-      constGroups.foreach(_.foreach { case (k, b) => out(k) = b.lo })
-      val refGroups = refine.groupBy { case (_, b) => (b.lo, b.hi, b.cnt) }
-        .values.toSeq
-      val allGroups = scanGroups ++ refGroups
-      val next = mutable.ArrayBuffer[(Long, Bracket)]()
-      if (allGroups.nonEmpty) {
-        def keyOf(grp: Seq[(Long, Bracket)], i: Int): Column =
-          if (i < scanGroups.length) v
-          else binExpr(v, grp.head._2, bins).cast(DoubleType)
-        val tag = allGroups.zipWithIndex
-          .foldLeft(null: Column) { case (acc, (grp, i)) =>
-            if (acc == null) when(grp.head._2.pred, i)
-            else acc.when(grp.head._2.pred, i)
-          }
-        val key = allGroups.zipWithIndex
-          .foldLeft(null: Column) { case (acc, (grp, i)) =>
-            if (acc == null) when(grp.head._2.pred, keyOf(grp, i))
-            else acc.when(grp.head._2.pred, keyOf(grp, i))
-          }
-        // STANDALONE range prefilter — an OR of plain ge/le ranges (one
-        // bin-width slack per bracket, so it is a strict superset of the
-        // exact CASE membership below): the tag CASE traps its embedded
-        // range conjuncts where the parquet filter translator cannot see
-        // them, so without this separate pure-comparison filter NOTHING
-        // reaches PushedFilters and every narrowed re-scan reads the
-        // whole table (caught by the real-plan audit in QuantilesSpec)
-        def clampLo(x: Double) = if (x.isNegInfinity) -Double.MaxValue else x
-        def clampHi(x: Double) = if (x.isPosInfinity) Double.MaxValue else x
-        val range = allGroups.map { grp =>
-          val b = grp.head._2
-          val w = width(b.lo, b.hi, bins)
-          v >= clampLo(b.lo - w) && v <= clampHi(b.hi + w)
-        }.reduce(_ || _)
-        // collected UNSORTED (driver-side sort of metadata-sized results
-        // beats a whole range-partitioning exchange in the plan)
-        val rows = base.filter(range)
-          .select(tag.as("__t"), key.as("__k"))
-          .filter(col("__t").isNotNull)
-          .groupBy(col("__t"), col("__k")).agg(count(lit(1)).as("c"))
-          .collect()
-        val byTag = rows.groupBy(_.getInt(0))
-          .map { case (t, rs) => t -> rs.sortBy(_.getDouble(1)) }
-        // leaf tags: walk the sorted value counts to each rank
-        for ((grp, i) <- scanGroups.zipWithIndex; (k, b) <- grp) {
-          val vs = byTag(i)
-          var acc = 0L; var j = 0; var found = false
-          while (!found && j < vs.length) {
-            acc += vs(j).getLong(2)
-            if (b.offset < acc) { out(k) = vs(j).getDouble(1); found = true }
-            j += 1
-          }
-          assert(found, s"rank ${b.offset} beyond bracket (cnt ${b.cnt})")
-        }
-        // refine tags: walk the histogram, narrow to the covering bin
-        for ((grp, gi) <- refGroups.zipWithIndex) {
-          val i = scanGroups.length + gi
-          val b0 = grp.head._2
-          val w = width(b0.lo, b0.hi, bins)
-          val rows2 = byTag(i)
-          val binIds = rows2.map(_.getDouble(1).toLong)
-          val cs = rows2.map(_.getLong(2))
-          for ((k, b) <- grp) {
-            var acc = 0L; var j = 0
-            while (j < binIds.length && acc + cs(j) <= b.offset) {
-              acc += cs(j); j += 1
-            }
-            assert(j < binIds.length,
-              s"rank ${b.offset} beyond histogram (cnt ${b.cnt})")
-            val bn = binIds(j)
-            val e0 = edge(b0.lo, b0.hi, bins, bn)
-            val e1 = edge(b0.lo, b0.hi, bins, bn + 1)
-            val lo2 = if (bn == 0) b.lo else e0
-            val hi2 = if (bn == bins - 1) b.hi else e1
-            // exact membership: the SAME bin expression; plus a one-bin-
-            // slack plain range conjunct so parquet min/max row-group
-            // stats prune the re-scan (slack absorbs edge rounding; an
-            // endpoint underflowing to ±Inf merely weakens the hint)
-            val pred2 = b.pred && binExpr(v, b0, bins) === bn.toInt &&
-              v >= (e0 - w) && v <= (e1 + w)
-            next += k -> Bracket(pred2, lo2, hi2, b.offset - acc, cs(j))
+      (lo, hi)
+    }
+
+    /** Leaf for probability p: the hull of its floor and ceil ranks'
+      * spans. The ranks are consecutive order statistics, so no row lies
+      * strictly between the two spans and the hull adds none.
+      */
+    def leaf(p: Double, leafLimit: Long): (Double, Double) = {
+      val pos = p * (n - 1)
+      val (lo, hi) = rankLeaf(math.floor(pos).toLong, leafLimit)
+      val (lo2, hi2) = rankLeaf(math.ceil(pos).toLong, leafLimit)
+      (math.min(lo, lo2), math.max(hi, hi2))
+    }
+
+    def scan(leaves: Seq[(Double, Double)], needSums: Boolean): Regions = {
+      val r = regionScan(frame, leaves, fewParts, needSums)
+      require(r.total == n, s"pass disagreement: pass1 n=$n, scan n=${r.total}")
+      r
+    }
+  }
+
+  /** Ascending merge of possibly-overlapping leaf intervals — the region
+    * scan's tag CASE requires ascending, disjoint leaves.
+    */
+  private[operators] def mergeIntervals(ls: Seq[(Double, Double)])
+      : Seq[(Double, Double)] = {
+    val sorted = ls.sortBy(_._1)
+    sorted.tail.foldLeft(List(sorted.head)) { (acc, l) =>
+      if (l._1 <= acc.head._2)
+        (acc.head._1, math.max(acc.head._2, l._2)) :: acc.tail
+      else l :: acc
+    }.reverse
+  }
+
+  /** Region scan result, tags in value order: even = opaque block (count,
+    * decimal sum), odd = leaf (sorted value counts), `last` the top tag.
+    */
+  private[operators] final class Regions(
+      val last: Int,
+      leaf: Map[Int, Array[(Double, Long)]],
+      cnt: Map[Int, Long],
+      sum: Map[Int, JBD]) {
+    def leafEntries(t: Int): Array[(Double, Long)] =
+      leaf.getOrElse(t, Array.empty)
+    def blockCnt(t: Int): Long = cnt.getOrElse(t, 0L)
+    def blockSum(t: Int): JBD = sum.getOrElse(t, JBD.ZERO)
+
+    /** Rows in the regions before tag t. */
+    def before(t: Int): Long = (0 until t).map(i =>
+      if (i % 2 == 0) blockCnt(i) else leafEntries(i).map(_._2).sum).sum
+
+    def total: Long = before(last + 1)
+
+    /** Exact value at a global 0-indexed rank, which must land in a leaf. */
+    def valueAt(k: Long): Double = {
+      var acc = 0L; var t = 0
+      while (t <= last) {
+        if (t % 2 == 0) {
+          acc += blockCnt(t)
+          require(k >= acc, s"rank $k fell in opaque region $t")
+        } else {
+          val es = leafEntries(t); var i = 0
+          while (i < es.length) {
+            acc += es(i)._2
+            if (k < acc) return es(i)._1
+            i += 1
           }
         }
+        t += 1
       }
-      active = next.toSeq
+      throw new IllegalStateException(s"rank $k beyond population $acc")
     }
-    out.toMap
   }
+
+  /** One tagged scan: value counts inside each leaf, count (and, with
+    * `needSums`, DECIMAL(28,6) sum of the strictly-between blocks) outside.
+    */
+  private def regionScan(base: DataFrame, leaves: Seq[(Double, Double)],
+      fewParts: Boolean, needSums: Boolean): Regions = {
+    val last = 2 * leaves.length
+    if (fewParts) {
+      import base.sparkSession.implicits._
+      // tag layout mirrors the SQL CASE below; sums accumulate in exact
+      // JBD per partition (serialized as plain strings — metadata-sized)
+      val ls = leaves.toArray
+      val parts = base.as[Double].mapPartitions { it =>
+        val leafCnt = mutable.HashMap.empty[(Int, Double), Long]
+        val blockCnt = new Array[Long](last + 1)
+        val blockSum = Array.fill(last + 1)(JBD.ZERO)
+        it.foreach { v =>
+          var t = last
+          var i = 0
+          var done = false
+          while (!done && i < ls.length) {
+            if (v < ls(i)._1) { t = 2 * i; done = true }
+            else if (v <= ls(i)._2) { t = 2 * i + 1; done = true }
+            else i += 1
+          }
+          if (t % 2 == 1)
+            leafCnt.updateWith((t, v))(o => Some(o.getOrElse(0L) + 1L))
+          else {
+            blockCnt(t) += 1
+            if (needSums && t != 0 && t != last)
+              blockSum(t) = blockSum(t).add(snap(v))
+          }
+        }
+        leafCnt.iterator.map { case ((t, v), c) => (t, Option(v), c, "") } ++
+          (0 to last by 2).iterator.filter(blockCnt(_) > 0).map(t =>
+            (t, Option.empty[Double], blockCnt(t), blockSum(t).toPlainString))
+      }.collect()
+      val leafAgg = parts.filter(_._2.isDefined)
+        .groupBy(r => (r._1, r._2.get))
+        .map { case ((t, v), g) => (t, v, g.map(_._3).sum) }
+        .groupBy(_._1)
+        .map { case (t, g) =>
+          t -> g.map(r => (r._2, r._3)).toArray.sortBy(_._1) }
+      val blocks = parts.filter(_._2.isEmpty).groupBy(_._1)
+      new Regions(last, leafAgg,
+        blocks.map { case (t, g) => t -> g.map(_._3).sum },
+        blocks.map { case (t, g) =>
+          t -> g.filter(_._4.nonEmpty).map(r => new JBD(r._4))
+            .foldLeft(JBD.ZERO)(_.add(_)) })
+    } else {
+      val v = col("__v")
+      val tag = leaves.zipWithIndex.foldLeft(null: Column) {
+        case (acc, ((lo, hi), i)) =>
+          val below =
+            if (acc == null) when(v < lo, 2 * i) else acc.when(v < lo, 2 * i)
+          below.when(v <= hi, 2 * i + 1)
+      }.otherwise(last)
+      val isLeaf = leaves.indices.map(i => lit(2 * i + 1))
+        .foldLeft(lit(false))((acc, t) => acc || (tag === t))
+      // decimal conversion only where the sum is consumed (the strictly-
+      // between regions); outer and leaf rows skip it, and rank-only
+      // callers (needSums=false) skip it everywhere
+      val isMiddle = !isLeaf && tag =!= 0 && tag =!= last
+      val dcol =
+        if (needSums) when(isMiddle, v).cast(DecimalType(28, 6))
+        else lit(null).cast(DecimalType(28, 6))
+      val rows = base
+        .select(tag.as("__t"), when(isLeaf, v).as("__k"), dcol.as("__d"))
+        .groupBy("__t", "__k")
+        .agg(count(lit(1)).as("c"), sum(col("__d")).as("s"))
+        .collect()
+      val byTag = rows.groupBy(_.getInt(0))
+      new Regions(last,
+        byTag.collect { case (t, g) if t % 2 == 1 =>
+          t -> g.map(r => (r.getDouble(1), r.getLong(2))).sortBy(_._1) },
+        byTag.collect { case (t, g) if t % 2 == 0 =>
+          t -> g.map(_.getLong(2)).sum },
+        byTag.collect { case (t, g) if t % 2 == 0 =>
+          t -> g.flatMap(r => Option(r.getDecimal(3)))
+            .foldLeft(JBD.ZERO)(_.add(_)) })
+    }
+  }
+
+  /** = CAST(d AS DECIMAL(28,6)): shortest-string decimal, HALF_UP. */
+  private[operators] def snap(d: Double): JBD =
+    JBD.valueOf(d).setScale(6, RoundingMode.HALF_UP)
 
   /** Round a double as Spark's `round(col, 6)` does (shortest-string
     * BigDecimal, HALF_UP) — for embedding driver-computed cutoffs back
     * into a gate that previously rounded the in-plan percentile.
     */
-  def round6(d: Double): Double =
-    java.math.BigDecimal.valueOf(d)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+  def round6(d: Double): Double = snap(d).doubleValue()
 }

@@ -1,59 +1,29 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import java.math.{BigDecimal => JBD, RoundingMode}
-import scala.collection.mutable
+import java.math.{BigDecimal => JBD}
 
 /** Winsorized moments in TWO distributed passes — the fused form of
-  * "exact p-low/p-high cutoffs, then clip and aggregate" that a11 needs.
+  * "exact p-low/p-high cutoffs, then clip and aggregate" that a11 needs,
+  * over the [[Quantiles]] log-bucket kernel.
   *
-  * The general machinery (`Quantiles.percentiles` + a clip scan) is
-  * bounded-memory but pays 4 sequential jobs (stats, histogram, leaf,
-  * clip); at bench scale each job carries a fixed scheduling floor, so
-  * the constant factor — not the asymptotics — made a11 the board's
-  * worst real-work ratio (r11: 10×). This operator removes half the
-  * passes structurally:
+  * A separate clip scan after the quantiles would pay a third job; at
+  * bench scale each job carries a fixed scheduling floor, so the constant
+  * factor — not the asymptotics — made a11 the board's worst real-work
+  * ratio (r11: 10×). Instead the kernel's region scan IS the clip pass:
+  * it value-counts the two cutoff leaves — giving the exact order
+  * statistics — and simultaneously aggregates every non-leaf region's
+  * count and DECIMAL(28,6) sum. The clipped sum then assembles DRIVER-side
+  * by exact decimal arithmetic: clipped tails contribute cutoff×count,
+  * leaf values contribute their snapped value×count, the middle
+  * contributes its distributed decimal sum — bit-identical to
+  * SUM(CAST(greatest(least(v, p99), p01) AS DECIMAL(28,6))) because every
+  * addend is the same snapped decimal.
   *
-  *  - Pass 1 needs NO prior stats scan: rows bucket by a SCALE-FREE log
-  *    bucket id (64 buckets per octave of |v|, sign-aware), so the bin
-  *    layout is data-independent — at most ~131k possible ids over the
-  *    entire double range, each collected as (id, cnt, min, max).
-  *    Walking the cumulative counts locates the bucket holding each
-  *    target rank, exactly as the histogram pass does, minus the
-  *    min/max pass that sized its bins.
-  *  - Pass 2 fuses LEAF and CLIP: one tagged scan value-counts the (two)
-  *    rank brackets — giving the exact order statistics — and
-  *    simultaneously aggregates every non-bracket region's count and
-  *    DECIMAL(28,6) sum. The clipped sum then assembles DRIVER-side by
-  *    exact decimal arithmetic: clipped tails contribute cutoff×count,
-  *    bracket values contribute their snapped value×count, the middle
-  *    contributes its distributed decimal sum — bit-identical to
-  *    SUM(CAST(greatest(least(v, p99), p01) AS DECIMAL(28,6))) because
-  *    every addend is the same snapped decimal.
-  *
-  * Each pass picks its aggregation strategy by input width:
-  *  - MANY partitions (a cluster read): groupBy + exchange — partial
-  *    aggregation shrinks each task to ≤|buckets| rows and the reducers
-  *    bound the driver's fan-in to the final ≤131k bucket rows. The
-  *    scale-correct shape: collect volume is independent of task count.
-  *  - FEW partitions (≤64 — the single-node / per-shard case): a
-  *    single-stage per-partition aggregation collected and merged on
-  *    the driver. Fan-in is partitions×buckets — small by the guard —
-  *    and the exchange's fixed scheduling cost (most of the job at
-  *    bench scale) disappears.
-  *
-  * Bounds: pass-1 collect ≤ occupied buckets (≤ ~131k, data-independent);
-  * pass-2 collect ≤ distinct values inside the rank brackets, which the
-  * `leafLimit` gate caps by each bracket's population. When a bracket
-  * exceeds `leafLimit` (a hyper-dense cutoff neighborhood — continuous
-  * full-precision values at 100 TB), the operator falls back to the
-  * iteratively-refining `Quantiles.percentiles` + clip-scan path rather
-  * than collecting an unbounded leaf: correctness and memory bounds are
-  * kept in both arms; the fast arm just also wins the constant factor
-  * whenever the data allows (any fixed-precision value domain does).
+  * Each cutoff leaf widens by [[leafEps]] so the round6-snapped cutoff
+  * stays inside it; the leaf then also collects the values within that
+  * epsilon of the rank span, beyond the kernel's `leafLimit` rows.
   */
 object Winsorize {
 
@@ -69,368 +39,17 @@ object Winsorize {
     // No persist: both passes re-decode the (pruned, single-column)
     // source. Measured at sf1 (r13 probe): building the in-memory
     // columnar cache costs ~2× what the second decode costs, so caching
-    // LOSES on a two-pass operator at local scale; at cluster scale the
-    // tradeoff is the caller's (pass a pre-persisted projection through
-    // `Quantiles`' entry points if the scan is the expensive side).
-    val base = df.select(col(value).cast(DoubleType).as("__v"))
-      .filter(col("__v").isNotNull)
-    fused(spark, base, pLow, pHigh, leafLimit).getOrElse {
-      // fallback arm: dense-bracket or non-finite data — the audited
-      // refine-until-leafLimit machinery plus one clip scan
-      val cuts = Quantiles
-        .percentiles(df, value, Seq(pLow, pHigh))
-        .map(Quantiles.round6)
-      val (c1, c2) = (lit(cuts(0)), lit(cuts(1)))
-      df.select(c1.as("p01"), c2.as("p99"),
-          when(col(value) < c1, 1).otherwise(0).as("lo"),
-          when(col(value) > c2, 1).otherwise(0).as("hi"),
-          greatest(least(col(value), c2), c1).as("clipped"))
-        .groupBy("p01", "p99")
-        .agg(sum(col("lo")).cast(LongType).as("n_clipped_low"),
-          sum(col("hi")).cast(LongType).as("n_clipped_high"),
-          sum(col("clipped").cast(DecimalType(28, 6)))
-            .cast(DoubleType).as("sum_clipped"))
-    }
-  }
-
-  /** Scale-free bucket id: 0 for ±0, else sign-aware 64-per-octave log
-    * bucket offset to keep negatives < 0-bucket < positives. The mapping
-    * only needs to be COARSELY monotone — per-bucket (min, max) rebuild
-    * exact value intervals and overlapping buckets merge — so the
-    * clamped float log is safe (and the SQL and JVM arms need not agree
-    * bit-for-bit), and non-finite inputs land in extreme buckets where
-    * the finiteness check rejects them.
-    */
-  private def bucketId(v: Column): Column = {
-    def mag(x: Column) =
-      floor(least(greatest(log2(x) * 64.0, lit(-1e9)), lit(1e9)))
-    when(v === 0.0, lit(0L))
-      .when(v > 0.0, mag(v) + (1L << 40))
-      .otherwise(-mag(-v) - (1L << 40))
-  }
-
-  private def bucketIdJvm(v: Double): Long = {
-    def mag(x: Double) = math.floor(
-      math.min(math.max(math.log(x) / math.log(2.0) * 64.0, -1e9), 1e9)).toLong
-    if (v == 0.0) 0L
-    else if (v > 0.0) mag(v) + (1L << 40)
-    else -mag(-v) - (1L << 40)
-  }
-
-  private[graft] final case class Bucket(lo: Double, hi: Double, cnt: Long)
-
-  /** Pass 1 both arms: (cnt, min, max) per occupied bucket. */
-  private[graft] def bucketHistogram(base: DataFrame, fewParts: Boolean)
-      : Array[Bucket] =
-    if (fewParts) {
-      import base.sparkSession.implicits._
-      base.as[Double].mapPartitions { it =>
-        val m = mutable.LongMap.empty[(Long, Double, Double)]
-        it.foreach { v =>
-          val b = bucketIdJvm(v)
-          m.get(b) match {
-            case Some((c, lo, hi)) =>
-              // min/max via comparisons that keep NaN sticky (NaN must
-              // surface in hi for the finiteness check, and math.max
-              // propagates it)
-              m.update(b, (c + 1, math.min(lo, v), math.max(hi, v)))
-            case None => m.update(b, (1L, v, v))
-          }
-        }
-        m.iterator.map { case (b, (c, lo, hi)) => (b, c, lo, hi) }
-      }.collect()
-        .groupBy(_._1).values
-        .map(g => Bucket(g.map(_._3).min, g.map(_._4).max, g.map(_._2).sum))
-        .toArray
-    } else
-      base.groupBy(bucketId(col("__v")).as("b"))
-        .agg(count(lit(1)).as("c"), min("__v").as("lo"), max("__v").as("hi"))
-        .collect()
-        .map(r => Bucket(r.getDouble(2), r.getDouble(3), r.getLong(1)))
-
-  /** Pass 2 result: per-tag leaf value counts / opaque block (cnt, sum).
-    * Tags are region indexes in value order: even = opaque, odd = leaf.
-    */
-  private[graft] final class Regions(
-      val leaf: Map[Int, Array[(Double, Long)]],
-      val cnt: Map[Int, Long],
-      val sum: Map[Int, JBD]) {
-    def leafEntries(t: Int): Array[(Double, Long)] =
-      leaf.getOrElse(t, Array.empty)
-    def blockCnt(t: Int): Long = cnt.getOrElse(t, 0L)
-    def blockSum(t: Int): JBD = sum.getOrElse(t, JBD.ZERO)
-    def total: Long = cnt.values.sum +
-      leaf.values.map(_.map(_._2).sum).sum
-  }
-
-  /** = CAST(d AS DECIMAL(28,6)): shortest-string decimal, HALF_UP. */
-  private def snap(d: Double): JBD =
-    JBD.valueOf(d).setScale(6, RoundingMode.HALF_UP)
-
-  /** Sort + merge value-overlapping buckets (float-log monotonicity
-    * slack), shared by the winsorize arm and [[exactQuantiles]].
-    */
-  private[graft] def mergedBuckets(raw: Array[Bucket]): Array[Bucket] = {
-    val sorted = raw.sortBy(_.lo)
-    sorted.tail.foldLeft(List(sorted.head)) { (acc, b) =>
-      if (b.lo <= acc.head.hi)
-        Bucket(acc.head.lo, math.max(acc.head.hi, b.hi),
-          acc.head.cnt + b.cnt) :: acc.tail
-      else b :: acc
-    }.reverse.toArray
-  }
-
-  /** The exact bucket span holding probability p's floor&ceil ranks
-    * (consecutive order stats — adjacent or equal buckets). Returns
-    * (lo, hi, population, count strictly below lo). Bucket lo/hi are
-    * ACTUAL min/max values, so `v >= lo && v <= hi` selects exactly the
-    * span's rows and `below` is exact.
-    */
-  private def rankSpan(p: Double, buckets: Array[Bucket],
-      cum: Array[Long], n: Long): (Double, Double, Long, Long) = {
-    def bucketOf(k: Long): Int = {
-      val i = java.util.Arrays.binarySearch(cum, k)
-      val at = if (i >= 0) i else -i - 2 // cum(at) <= k < cum(at+1)
-      require(at >= 0 && at < buckets.length, s"rank $k out of [0, $n)")
-      at
-    }
-    val pos = p * (n - 1)
-    val iLo = bucketOf(math.floor(pos).toLong)
-    val iHi = bucketOf(math.ceil(pos).toLong)
-    (buckets(iLo).lo, buckets(iHi).hi, cum(iHi + 1) - cum(iLo), cum(iLo))
-  }
-
-  private def leafEps(lo: Double, hi: Double): Double =
-    math.max(1e-5, 8 * math.ulp(math.max(math.abs(lo), math.abs(hi))))
-
-  /** One leaf interval per probability, spanning its floor&ceil ranks, ±
-    * an epsilon wide enough to contain a round6-snapped cutoff. Returns
-    * (lo, hi, bracket population).
-    */
-  private[graft] def leafInterval(p: Double, buckets: Array[Bucket],
-      cum: Array[Long], n: Long): (Double, Double, Long) = {
-    val (lo, hi, cnt, _) = rankSpan(p, buckets, cum, n)
-    val eps = leafEps(lo, hi)
-    (lo - eps, hi + eps, cnt)
-  }
-
-  /** Narrow a DENSE rank span with ONE equal-width histogram pass inside
-    * it: 4096 bins over [lo, hi], walk the cumulative counts from `below`
-    * to the bins holding the floor/ceil ranks, return that bin span ± eps
-    * and its population. One 4096× density reduction — enough for any
-    * realistic value distribution; a still-dense result falls back to the
-    * refine machinery. This keeps the driver collect bounded at ANY
-    * density (the r13 finding: sf1 l_extendedprice's p99 bucket held
-    * 129k rows > the 65k leafLimit, silently routing a11 to the 3×-
-    * slower fallback arm).
-    */
-  private def narrowSpan(base: DataFrame, p: Double, lo: Double, hi: Double,
-      below: Long, n: Long, fewParts: Boolean, bins: Int = 4096)
-      : (Double, Double, Long) = {
-    val w =
-      if ((hi - lo).isInfinity) hi / bins - lo / bins else (hi - lo) / bins
-    def binOfJvm(v: Double): Int = {
-      val raw =
-        if ((hi - lo).isInfinity) math.floor(v / w - lo / w)
-        else math.floor((v - lo) / w)
-      math.min(math.max(raw, 0.0), (bins - 1).toDouble).toInt
-    }
-    val counts: Array[Long] =
-      if (fewParts) {
-        import base.sparkSession.implicits._
-        val parts = base.as[Double].mapPartitions { it =>
-          val c = new Array[Long](bins)
-          it.foreach(v => if (v >= lo && v <= hi) c(binOfJvm(v)) += 1)
-          Iterator.single(c)
-        }.collect()
-        parts.transpose.map(_.sum)
-      } else {
-        val v = col("__v")
-        val raw =
-          if ((hi - lo).isInfinity) floor(v / w - lo / w)
-          else floor((v - lo) / w)
-        val bin = least(greatest(raw, lit(0.0)), lit((bins - 1).toDouble))
-          .cast(org.apache.spark.sql.types.IntegerType)
-        val out = new Array[Long](bins)
-        base.filter(v >= lo && v <= hi).groupBy(bin.as("__b"))
-          .agg(count(lit(1)).as("c")).collect()
-          .foreach(r => out(r.getInt(0)) = r.getLong(1))
-        out
-      }
-    val pos = p * (n - 1)
-    val kLo = math.floor(pos).toLong; val kHi = math.ceil(pos).toLong
-    var acc = below; var i = 0
-    while (i < bins && acc + counts(i) <= kLo) { acc += counts(i); i += 1 }
-    require(i < bins, s"rank $kLo beyond narrowed span")
-    val binLo = i
-    while (i < bins && acc + counts(i) <= kHi) { acc += counts(i); i += 1 }
-    require(i < bins, s"rank $kHi beyond narrowed span")
-    val binHi = i
-    val eLo = lo + w * binLo
-    val eHi = lo + w * (binHi + 1)
-    val eps = leafEps(eLo, eHi)
-    ((eLo - eps).max(lo - eps), (eHi + eps).min(hi + eps),
-      (binLo to binHi).map(counts(_)).sum)
-  }
-
-  /** Leaf interval for probability p, narrowed by [[narrowSpan]] if its
-    * bucket span is denser than `leafLimit`; None when even the narrowed
-    * bin span is too dense (caller falls back). A single-valued span
-    * (lo == hi) never needs narrowing — its leaf collect is one row
-    * however large the population.
-    */
-  private def resolveLeaf(base: DataFrame, p: Double, buckets: Array[Bucket],
-      cum: Array[Long], n: Long, leafLimit: Long, fewParts: Boolean)
-      : Option[(Double, Double)] = {
-    val (lo, hi, cnt, below) = rankSpan(p, buckets, cum, n)
-    val eps = leafEps(lo, hi)
-    if (cnt <= leafLimit || lo == hi) Some((lo - eps, hi + eps))
-    else {
-      val (nLo, nHi, nCnt) = narrowSpan(base, p, lo, hi, below, n, fewParts)
-      if (nCnt <= leafLimit) Some((nLo, nHi)) else None
-    }
-  }
-
-  /** Ascending merge of possibly-overlapping leaf intervals — regionScan's
-    * tag CASE requires ascending, disjoint leaves.
-    */
-  private def mergeIntervals(ls: Seq[(Double, Double)])
-      : Seq[(Double, Double)] = {
-    val sorted = ls.sortBy(_._1)
-    sorted.tail.foldLeft(List(sorted.head)) { (acc, l) =>
-      if (l._1 <= acc.head._2)
-        (acc.head._1, math.max(acc.head._2, l._2)) :: acc.tail
-      else l :: acc
-    }.reverse
-  }
-
-  private[graft] def regionScan(base: DataFrame, leaves: Seq[(Double, Double)],
-      fewParts: Boolean, needSums: Boolean = true): Regions = {
-    val last = 2 * leaves.length
-    if (fewParts) {
-      import base.sparkSession.implicits._
-      // tag layout mirrors the SQL CASE below; sums accumulate in exact
-      // JBD per partition (serialized as plain strings — metadata-sized)
-      val ls = leaves.toArray
-      val parts = base.as[Double].mapPartitions { it =>
-        val leafCnt = mutable.HashMap.empty[(Int, Double), Long]
-        val blockCnt = new Array[Long](last + 1)
-        val blockSum = Array.fill(last + 1)(JBD.ZERO)
-        it.foreach { v =>
-          var t = last
-          var i = 0
-          var done = false
-          while (!done && i < ls.length) {
-            if (v < ls(i)._1) { t = 2 * i; done = true }
-            else if (v <= ls(i)._2) { t = 2 * i + 1; done = true }
-            else i += 1
-          }
-          if (t % 2 == 1)
-            leafCnt.updateWith((t, v))(o => Some(o.getOrElse(0L) + 1L))
-          else {
-            blockCnt(t) += 1
-            if (needSums && t != 0 && t != last)
-              blockSum(t) = blockSum(t).add(snap(v))
-          }
-        }
-        leafCnt.iterator.map { case ((t, v), c) => (t, Option(v), c, "") } ++
-          (0 to last by 2).iterator.filter(blockCnt(_) > 0).map(t =>
-            (t, Option.empty[Double], blockCnt(t), blockSum(t).toPlainString))
-      }.collect()
-      val leafAgg = parts.filter(_._2.isDefined)
-        .groupBy(r => (r._1, r._2.get))
-        .map { case ((t, v), g) => (t, v, g.map(_._3).sum) }
-        .groupBy(_._1)
-        .map { case (t, g) =>
-          t -> g.map(r => (r._2, r._3)).toArray.sortBy(_._1) }
-      val blocks = parts.filter(_._2.isEmpty).groupBy(_._1)
-      new Regions(leafAgg,
-        blocks.map { case (t, g) => t -> g.map(_._3).sum },
-        blocks.map { case (t, g) =>
-          t -> g.filter(_._4.nonEmpty).map(r => new JBD(r._4))
-            .foldLeft(JBD.ZERO)(_.add(_)) })
-    } else {
-      val v = col("__v")
-      val tag = leaves.zipWithIndex.foldLeft(null: Column) {
-        case (acc, ((lo, hi), i)) =>
-          val below =
-            if (acc == null) when(v < lo, 2 * i) else acc.when(v < lo, 2 * i)
-          below.when(v <= hi, 2 * i + 1)
-      }.otherwise(last)
-      val isLeaf = leaves.indices.map(i => lit(2 * i + 1))
-        .foldLeft(lit(false))((acc, t) => acc || (tag === t))
-      // decimal conversion only where the sum is consumed (the strictly-
-      // between regions); outer and leaf rows skip it, and rank-only
-      // callers (needSums=false) skip it everywhere
-      val isMiddle = !isLeaf && tag =!= 0 && tag =!= last
-      val dcol =
-        if (needSums) when(isMiddle, v).cast(DecimalType(28, 6))
-        else lit(null).cast(DecimalType(28, 6))
-      val rows = base
-        .select(tag.as("__t"), when(isLeaf, v).as("__k"), dcol.as("__d"))
-        .groupBy("__t", "__k")
-        .agg(count(lit(1)).as("c"), sum(col("__d")).as("s"))
-        .collect()
-      val byTag = rows.groupBy(_.getInt(0))
-      new Regions(
-        byTag.collect { case (t, g) if t % 2 == 1 =>
-          t -> g.map(r => (r.getDouble(1), r.getLong(2))).sortBy(_._1) },
-        byTag.collect { case (t, g) if t % 2 == 0 =>
-          t -> g.map(_.getLong(2)).sum },
-        byTag.collect { case (t, g) if t % 2 == 0 =>
-          t -> g.flatMap(r => Option(r.getDecimal(3)))
-            .foldLeft(JBD.ZERO)(_.add(_)) })
-    }
-  }
-
-  /** The two-pass arm; None when data routes to the fallback. */
-  private def fused(spark: SparkSession, base: DataFrame, pLow: Double,
-      pHigh: Double, leafLimit: Long): Option[DataFrame] = {
-    val fewParts = base.rdd.getNumPartitions <= 64
-
-    // ---- pass 1: scale-free bucket histogram ----
-    val raw = bucketHistogram(base, fewParts)
-    if (raw.isEmpty) throw new IllegalArgumentException(
+    // LOSES on a two-pass operator at local scale.
+    val x = Quantiles.locate(Quantiles.projected(df, value),
       "winsorize of empty input")
-    val finite = raw.forall(b =>
-      !b.hi.isNaN && !b.lo.isInfinity && !b.hi.isInfinity)
-    if (!finite) return None // percentiles() raises its documented error
-    val buckets = mergedBuckets(raw)
-    val n = buckets.map(_.cnt).sum
-    // rank -> covering bucket index
-    val cum = buckets.scanLeft(0L)(_ + _.cnt)
-    val (l1, l2) =
-      (resolveLeaf(base, pLow, buckets, cum, n, leafLimit, fewParts),
-        resolveLeaf(base, pHigh, buckets, cum, n, leafLimit, fewParts))
-    if (l1.isEmpty || l2.isEmpty) return None // dense even after narrowing
-    val leaves = mergeIntervals(Seq(l1.get, l2.get))
-
-    // ---- pass 2: tagged scan — leaf value counts + region aggregates ----
-    val r = regionScan(base, leaves, fewParts)
-    require(r.total == n, s"pass disagreement: pass1 n=$n, pass2 n=${r.total}")
-
-    // exact value at a global 0-indexed rank (must land in a leaf)
-    def valueAt(k: Long): Double = {
-      var acc = 0L
-      for (t <- 0 to 2 * leaves.length) {
-        if (t % 2 == 0) acc += r.blockCnt(t)
-        else {
-          for ((value, c) <- r.leafEntries(t)) {
-            acc += c
-            if (k < acc) return value
-          }
-        }
-        require(k >= acc || t % 2 == 1, s"rank $k fell in opaque region $t")
-      }
-      throw new IllegalStateException(s"rank $k beyond population $acc")
-    }
-    def cutoff(p: Double): Double = {
-      val pos = p * (n - 1)
-      val lo = math.floor(pos).toLong; val hi = math.ceil(pos).toLong
-      val q = if (lo == hi) valueAt(lo)
-        else (hi - pos) * valueAt(lo) + (pos - lo) * valueAt(hi)
-      Quantiles.round6(q)
-    }
+    val leaves = Quantiles.mergeIntervals(Seq(pLow, pHigh).map { p =>
+      val (lo, hi) = x.leaf(p, leafLimit)
+      val eps = leafEps(lo, hi)
+      (lo - eps, hi + eps)
+    })
+    val r = x.scan(leaves, needSums = true)
+    def cutoff(p: Double) =
+      Quantiles.round6(Quantiles.interpolate(p, x.n, r.valueAt))
     val c1 = cutoff(pLow); val c2 = cutoff(pHigh)
     // the snapped cutoffs must sit inside leaf intervals, else region
     // membership vs cutoff comparisons could disagree — the epsilons
@@ -442,181 +61,32 @@ object Winsorize {
     // ---- driver-side exact assembly ----
     var nLow = 0L; var nHigh = 0L
     var sumBD = JBD.ZERO
-    for (t <- 0 to 2 * leaves.length) {
+    for (t <- 0 to r.last) {
       if (t % 2 == 0) {
         val cnt = r.blockCnt(t)
         if (cnt > 0) {
-          if (t == 0) nLow += cnt                       // below first leaf
-          else if (t == 2 * leaves.length) nHigh += cnt // above last leaf
-          else sumBD = sumBD.add(r.blockSum(t))         // strictly between
+          if (t == 0) nLow += cnt                 // below first leaf
+          else if (t == r.last) nHigh += cnt      // above last leaf
+          else sumBD = sumBD.add(r.blockSum(t))   // strictly between
         }
       } else for ((value, c) <- r.leafEntries(t)) {
         if (value < c1) nLow += c
         else if (value > c2) nHigh += c
-        else sumBD = sumBD.add(snap(value).multiply(JBD.valueOf(c)))
+        else sumBD = sumBD.add(Quantiles.snap(value).multiply(JBD.valueOf(c)))
       }
     }
-    sumBD = sumBD.add(snap(c1).multiply(JBD.valueOf(nLow)))
-      .add(snap(c2).multiply(JBD.valueOf(nHigh)))
+    sumBD = sumBD.add(Quantiles.snap(c1).multiply(JBD.valueOf(nLow)))
+      .add(Quantiles.snap(c2).multiply(JBD.valueOf(nHigh)))
 
     import spark.implicits._
-    Some(Seq((c1, c2, nLow, nHigh, sumBD.doubleValue))
-      .toDF("p01", "p99", "n_clipped_low", "n_clipped_high", "sum_clipped"))
+    Seq((c1, c2, nLow, nHigh, sumBD.doubleValue))
+      .toDF("p01", "p99", "n_clipped_low", "n_clipped_high", "sum_clipped")
   }
 
-  /** Exact interpolated quantiles — and, optionally, exact ranks of probe
-    * values — in TWO jobs total, the same log-bucket machinery as the
-    * winsorize arm minus the clip assembly. This is the low-job-count
-    * sibling of `Quantiles.percentilesPrepared` (which pays stats +
-    * histogram + leaf = 3+ sequential jobs): at bench scale each job
-    * carries a fixed scheduling floor, so a MAD (two dependent rounds) or
-    * an approx-gated-by-exact row is floor-bound, not work-bound
-    * (r12 sf1: a14 3.5×, a19 7.5× vs the oracle).
-    *
-    *  - `base` is the projected single-double `__v` frame
-    *    (`Quantiles.projected` / `prepared`) — persist it when composing
-    *    rounds.
-    *  - Returned quantiles are RAW (bit-identical to percentile()'s
-    *    interpolation over the same order statistics); callers round.
-    *  - `probes(i)`'s rank is the exact `count(v <= probe)` — each probe
-    *    gets its own leaf interval so the count assembles from region
-    *    totals + the probe leaf's value counts, no extra scan. The rank
-    *    of a GK estimate is exactly what the a19 gate needs.
-    *  - Returns None (caller falls back to the refine-until-leafLimit
-    *    machinery) on non-finite data or a leaf bracket denser than
-    *    `leafLimit` — same contract as the winsorize arm. The third
-    *    element is the exact row count (free from pass 1 — rank gates
-    *    need it).
+  /** Widening that keeps the round6-snapped value of anything in [lo, hi]
+    * inside the interval: round6 moves a value by at most 5e-7 plus the
+    * decimal round trip's few ulps.
     */
-  def exactQuantiles(base: DataFrame, ps: Seq[Double],
-      probes: Seq[Double] = Nil, leafLimit: Long = 1L << 16)
-      : Option[(Seq[Double], Seq[Long], Long)] = {
-    require(ps.nonEmpty && ps.forall(p => p >= 0 && p <= 1), "p in [0,1]")
-    require(probes.forall(x => !x.isNaN && !x.isInfinity), "finite probes")
-    val fewParts = base.rdd.getNumPartitions <= 64
-    val raw = bucketHistogram(base, fewParts)
-    if (raw.isEmpty)
-      throw new IllegalArgumentException("quantiles of empty input")
-    if (!raw.forall(b => !b.hi.isNaN && !b.lo.isInfinity && !b.hi.isInfinity))
-      return None
-    val buckets = mergedBuckets(raw)
-    val n = buckets.map(_.cnt).sum
-    val cum = buckets.scanLeft(0L)(_ + _.cnt)
-    val qLeaves0 =
-      ps.map(resolveLeaf(base, _, buckets, cum, n, leafLimit, fewParts))
-    if (qLeaves0.exists(_.isEmpty)) return None
-    val qLeaves = qLeaves0.map(_.get)
-    // probe leaves are VALUE-anchored: a small interval around the probe
-    // whose population is bounded by the buckets it touches
-    val probeLeaves = probes.map { x =>
-      val eps = math.max(1e-5, 8 * math.ulp(math.abs(x)))
-      val (lo, hi) = (x - eps, x + eps)
-      val cnt = buckets.iterator
-        .filter(b => b.hi >= lo && b.lo <= hi).map(_.cnt).sum
-      (lo, hi, cnt)
-    }
-    if (probeLeaves.exists(_._3 > leafLimit)) return None
-    val leaves =
-      mergeIntervals(qLeaves ++ probeLeaves.map(l => (l._1, l._2)))
-
-    val r = regionScan(base, leaves, fewParts, needSums = false)
-    require(r.total == n, s"pass disagreement: pass1 n=$n, pass2 n=${r.total}")
-
-    def valueAt(k: Long): Double = {
-      var acc = 0L
-      for (t <- 0 to 2 * leaves.length) {
-        if (t % 2 == 0) acc += r.blockCnt(t)
-        else {
-          for ((value, c) <- r.leafEntries(t)) {
-            acc += c
-            if (k < acc) return value
-          }
-        }
-        require(k >= acc || t % 2 == 1, s"rank $k fell in opaque region $t")
-      }
-      throw new IllegalStateException(s"rank $k beyond population $acc")
-    }
-    val qs = ps.map { p =>
-      val pos = p * (n - 1)
-      val lo = math.floor(pos).toLong; val hi = math.ceil(pos).toLong
-      if (lo == hi) valueAt(lo)
-      else (hi - pos) * valueAt(lo) + (pos - lo) * valueAt(hi)
-    }
-    // rank(x) = count(v <= x): full regions strictly below x's leaf, plus
-    // the leaf's entries <= x; every v in (x−eps, x+eps) is IN that leaf
-    // by construction, so the region split is exact at x
-    val ranks = probes.map { x =>
-      val li = leaves.indexWhere(l => x >= l._1 && x <= l._2)
-      require(li >= 0, s"probe $x escaped its leaf interval")
-      val below = (0 until 2 * li + 1).map { t =>
-        if (t % 2 == 0) r.blockCnt(t)
-        else r.leafEntries(t).map(_._2).sum
-      }.sum
-      below + r.leafEntries(2 * li + 1).filter(_._1 <= x).map(_._2).sum
-    }
-    Some((qs, ranks, n))
-  }
-
-  /** Median + median-absolute-deviation in THREE jobs: one bucket
-    * histogram, one leaf scan for the median, one leaf scan for the MAD.
-    * The deviation round needs NO second histogram pass — the x-space
-    * buckets map driver-side into |x − med| space (a bucket entirely on
-    * one side of `med` maps monotonically; a straddling bucket maps to
-    * [0, max distance]; counts carry over exactly and IEEE subtraction's
-    * monotone rounding keeps every value inside its mapped interval), so
-    * the dev-rank bracket locates in metadata.
-    *
-    * `snapMedian` is applied to the interpolated median BEFORE the
-    * deviation pass (a14's contract snaps to the round-6 gate grid so
-    * both engines see bit-identical deviation inputs). None → caller
-    * falls back (non-finite data / dense bracket), same as the other
-    * fused arms.
-    */
-  def medianAndMad(base: DataFrame,
-      snapMedian: Double => Double = identity,
-      leafLimit: Long = 1L << 16): Option[(Double, Double)] = {
-    val fewParts = base.rdd.getNumPartitions <= 64
-    val raw = bucketHistogram(base, fewParts)
-    if (raw.isEmpty)
-      throw new IllegalArgumentException("median of empty input")
-    if (!raw.forall(b => !b.hi.isNaN && !b.lo.isInfinity && !b.hi.isInfinity))
-      return None
-    val buckets = mergedBuckets(raw)
-    val n = buckets.map(_.cnt).sum
-    val cum = buckets.scanLeft(0L)(_ + _.cnt)
-
-    def resolve(frame: DataFrame, bs: Array[Bucket], cm: Array[Long])
-        : Option[Double] = {
-      val l = resolveLeaf(frame, 0.5, bs, cm, n, leafLimit, fewParts)
-      if (l.isEmpty) return None
-      val leaves = Seq(l.get)
-      val r = regionScan(frame, leaves, fewParts, needSums = false)
-      require(r.total == n, s"pass disagreement: $n vs ${r.total}")
-      def valueAt(k: Long): Double = {
-        var acc = r.blockCnt(0)
-        require(k >= acc, s"rank $k fell in opaque region 0")
-        for ((value, c) <- r.leafEntries(1)) {
-          acc += c
-          if (k < acc) return value
-        }
-        throw new IllegalStateException(s"rank $k beyond leaf (acc $acc)")
-      }
-      val pos = 0.5 * (n - 1)
-      val lo = math.floor(pos).toLong; val hi = math.ceil(pos).toLong
-      Some(if (lo == hi) valueAt(lo)
-      else (hi - pos) * valueAt(lo) + (pos - lo) * valueAt(hi))
-    }
-
-    resolve(base, buckets, cum).flatMap { med0 =>
-      val med = snapMedian(med0)
-      val devB = mergedBuckets(buckets.map { b =>
-        if (b.hi <= med) Bucket(med - b.hi, med - b.lo, b.cnt)
-        else if (b.lo >= med) Bucket(b.lo - med, b.hi - med, b.cnt)
-        else Bucket(0.0, math.max(med - b.lo, b.hi - med), b.cnt)
-      })
-      val devCum = devB.scanLeft(0L)(_ + _.cnt)
-      val dev = base.select(abs(col("__v") - med).as("__v"))
-      resolve(dev, devB, devCum).map(mad => (med, mad))
-    }
-  }
+  private def leafEps(lo: Double, hi: Double): Double =
+    math.max(1e-5, 8 * math.ulp(math.max(math.abs(lo), math.abs(hi))))
 }

@@ -1010,15 +1010,8 @@ object LlmOps {
       edges: DataFrame): DataFrame = {
     val spark = labels0.sparkSession
     val schema = labels0.schema
-    val dbg = sys.env.contains("GRAFT_DEBUG_EDGES")
-    def tms[A](tag: String)(body: => A): A = {
-      val t0 = System.nanoTime(); val r = body
-      if (dbg) System.err.println(
-        f"[minLabelDriver] $tag ${(System.nanoTime() - t0) / 1e6}%.0f ms")
-      r
-    }
-    val lab = tms("labels0.collect")(labels0.collect())
-    val es = tms("edges.collect")(edges.collect())
+    val lab = labels0.collect()
+    val es = edges.collect()
     val idx = new java.util.HashMap[Any, Integer](lab.length * 2)
     var n = 0
     lab.foreach { r =>
@@ -1075,8 +1068,6 @@ object LlmOps {
     // Small graphs skip the distributed fixpoint entirely (see
     // MinLabelDriverEdges): every labelSum round is join+aggregate jobs
     // whose scheduling floor dominates at this graph scale
-    if (sys.env.contains("GRAFT_DEBUG_EDGES"))
-      System.err.println(s"[minLabelLoop] nEdges=$nEdges")
     if (nEdges <= minLabelDriverMaxEdges.getOrElse(MinLabelDriverEdges))
       return minLabelDriver(labels0, edges)
     // Size the loop's parallelism to the GRAPH, not the session default:

@@ -1093,11 +1093,7 @@ object Pipelines {
           s.read.parquet(path)
             .filter(col("x").between(40, 80) && col("y").between(100, 140))
             .mat() // eager: materialize before the lake goes away
-        } finally {
-          // forensics knob: keep the written lake for post-mortem reads
-          if (!sys.env.contains("GRAFT_O6_KEEP")) fs.delete(hp, true)
-          else System.err.println(s"[o6] lake kept at $path")
-        }
+        } finally fs.delete(hp, true)
       },
       Some("""SELECT o_orderkey,
                      CAST(o_orderkey % 251 AS INTEGER) AS x,

@@ -378,38 +378,23 @@ object Relational {
     // gated by exact RANK position: the GK p50 estimate's true rank must
     // sit within the requested ±1% rank error of the median position.
     // Same approx-gated-by-exact contract as A18; the exact median comes
-    // from the bounded-memory histogram-bracket operator (not a value
-    // buffer), so both arms scale.
+    // from the bounded-memory log-bucket kernel (not a value buffer), so
+    // both arms scale.
     ("a19_approx_quantile_gate",
       (s, d) => {
-        // FUSED (r13): THREE jobs on one persisted projection — the GK
-        // sketch, then the 2-job exact arm whose probe support computes
-        // rank(apx) = count(v <= apx) inside the SAME tagged leaf scan
-        // that resolves the exact median (the r12 shape decoded the fact
-        // parquet once per arm + a dedicated rank scan — 7.5× vs the
-        // oracle, nearly all job floors). The fallback arm keeps the old
-        // scan-per-piece shape for dense/non-finite data.
-        import graft.operators.{Quantiles, Winsorize}
+        // FUSED (r13): THREE jobs — the GK sketch, then the 2-job exact
+        // kernel whose probe support computes rank(apx) = count(v <= apx)
+        // inside the SAME region scan that resolves the exact median (the
+        // r12 shape decoded the fact parquet once per arm + a dedicated
+        // rank scan — 7.5× vs the oracle, nearly all job floors)
+        import graft.operators.Quantiles
         val base = Quantiles.projected(lineitem(s, d), "l_extendedprice")
         val apx = base.stat.approxQuantile("__v", Array(0.5), 0.01)(0)
-        Winsorize.exactQuantiles(base, Seq(0.5), probes = Seq(apx)) match {
-          case Some((qs, ranks, n)) =>
-            val exact = Quantiles.round6(qs.head)
-            val gkOk =
-              math.abs(ranks.head - n * 0.5) <= n * 0.011 + 1
-            s.range(1).select(lit(exact).as("exact_p50"),
-              lit(gkOk).as("gk_rank_ok"))
-          case None =>
-            val b = Quantiles.prepared(lineitem(s, d), "l_extendedprice")
-            val st @ (n, _, _) = Quantiles.statsOf(b)
-            val exact = Quantiles.round6(Quantiles
-              .percentilesPrepared(b, Seq(0.5), known = Some(st)).head)
-            b.agg(sum(when(col("__v") <= apx, 1L).otherwise(0L))
-                .as("rank_apx"))
-              .select(lit(exact).as("exact_p50"),
-                (abs(col("rank_apx") - lit(n) * 0.5)
-                  <= lit(n) * 0.011 + 1).as("gk_rank_ok"))
-        }
+        val (qs, ranks, n) =
+          Quantiles.exact(base, Seq(0.5), probes = Seq(apx))
+        val gkOk = math.abs(ranks.head - n * 0.5) <= n * 0.011 + 1
+        s.range(1).select(lit(Quantiles.round6(qs.head)).as("exact_p50"),
+          lit(gkOk).as("gk_rank_ok"))
       },
       Some("""SELECT round(quantile_cont(l_extendedprice, 0.5), 6)
                        AS exact_p50,
@@ -695,18 +680,16 @@ object Relational {
                 FROM orph) u""")),
 
     // A11 — WINSORIZE stats (outlier clipping at p01/p99, the robust-stats
-    // prep step): exact interpolated percentiles via the histogram-bracket
-    // selection in operators.Quantiles — NOT percentile(), whose per-
+    // prep step): exact interpolated percentiles via the log-bucket
+    // kernel in operators.Quantiles — NOT percentile(), whose per-
     // partition value→count buffer grows with the data and is the one
     // linear-memory aggregate a 100 TB run cannot afford (VERDICT r9).
     // The cutoffs are bit-identical to percentile()'s (exact order
-    // statistics + the same interpolation expression), cost O(1) extra
-    // column scans with O(bins) executor memory, and embed as literals;
-    // clipping + tallies stay one narrow pass over the fact table.
+    // statistics + the same interpolation expression) with O(buckets)
+    // executor memory; clipping + tallies ride the kernel's region scan.
     ("a11_winsorize",
       // the fused two-pass operator (log-bucket rank location + one
-      // leaf/clip scan with driver-side exact decimal assembly); its
-      // dense-bracket fallback is the old percentiles + clip-scan shape
+      // leaf/clip scan with driver-side exact decimal assembly)
       (s, d) => graft.operators.Winsorize.winsorizedStats(
         s, lineitem(s, d), "l_extendedprice", 0.01, 0.99),
       Some("""WITH cuts AS (
@@ -741,17 +724,15 @@ object Relational {
               FROM lineitem GROUP BY 1""")),
 
     // A13 — EXACT multi-quantile profile (the distribution summary every
-    // curation report opens with), via the same bounded-memory machinery
-    // as A11/A14: quartiles of an unbounded double column with O(buckets)
+    // curation report opens with), via the same bounded-memory kernel as
+    // A11/A14: quartiles of an unbounded double column with O(buckets)
     // executor memory and driver traffic, where percentile() would buffer
     // a value→count map of the whole column. All three quartiles resolve
-    // from ONE histogram + ONE tagged leaf scan (the 2-job arm; the
-    // refine machinery stays as the dense-bracket fallback inside
-    // Quantiles.exact).
+    // from ONE histogram + ONE tagged leaf scan.
     ("a13_exact_quantiles",
       (s, d) => {
         val qs = graft.operators.Quantiles
-          .exactCol(lineitem(s, d), "l_extendedprice",
+          .percentiles(lineitem(s, d), "l_extendedprice",
             Seq(0.25, 0.5, 0.75))
           .map(graft.operators.Quantiles.round6)
         s.range(1).select(lit(qs(0)).as("q25"), lit(qs(1)).as("q50"),
@@ -769,40 +750,21 @@ object Relational {
     // derived column. The median is snapped to the 6-decimal gate grid
     // BEFORE the deviation pass in BOTH engines, so the second-phase
     // input is bit-identical across them by the round-6 equality the
-    // gate itself establishes. Memory stays O(bins) per pass; at scale
+    // gate itself establishes. Memory stays O(buckets) per pass; at scale
     // this is 2× the quantile cost, never a buffer of the column.
     ("a14_mad",
       (s, d) => {
         // FUSED two-phase shape (r13): THREE jobs — one log-bucket
         // histogram, one leaf scan per round; the deviation round's
         // histogram derives driver-side from the x-space buckets
-        // (Winsorize.medianAndMad), so round 2 pays only its leaf scan.
+        // (Quantiles.medianAndMad), so round 2 pays only its leaf scan.
         // The r12 shape paid ~7 jobs + two parquet decodes and measured
         // 3.5× vs the oracle at sf1.
-        import graft.operators.{Quantiles, Winsorize}
+        import graft.operators.Quantiles
         val base = Quantiles.projected(lineitem(s, d), "l_extendedprice")
-        val (med, mad) = Winsorize.medianAndMad(base, Quantiles.round6)
-          .map { case (m, md) => (m, Quantiles.round6(md)) }
-          .getOrElse {
-            // dense-bracket / non-finite fallback: straight to the refine
-            // machinery over one persisted projection. NOT Quantiles.exact
-            // — that would re-attempt the SAME fused histogram arm that
-            // just returned None, re-paying a known-doomed 2-job probe
-            // (ADVICE r13). One stats scan seeds BOTH rounds: the
-            // deviation bounds derive driver-side (|x−m| ∈ [0,
-            // max(mx−m, m−mn)], count unchanged by a null-free map).
-            val b = Quantiles.prepared(lineitem(s, d), "l_extendedprice")
-            try {
-              val st @ (n, mn, mx) = Quantiles.statsOf(b)
-              val m = Quantiles.round6(Quantiles.percentilesPrepared(
-                b, Seq(0.5), known = Some(st)).head)
-              val md = Quantiles.round6(Quantiles.percentilesPrepared(
-                b.select(abs(col("__v") - m).as("__v")), Seq(0.5),
-                known = Some((n, 0.0, math.max(mx - m, m - mn)))).head)
-              (m, md)
-            } finally b.unpersist(blocking = false)
-          }
-        s.range(1).select(lit(med).as("median"), lit(mad).as("mad"))
+        val (med, mad) = Quantiles.medianAndMad(base, Quantiles.round6)
+        s.range(1).select(lit(med).as("median"),
+          lit(Quantiles.round6(mad)).as("mad"))
       },
       Some("""WITH m AS (
                 SELECT round(quantile_cont(l_extendedprice, 0.5), 6) AS med
@@ -815,7 +777,7 @@ object Relational {
 
     // A15 — robust SPIKE DETECTION (the anomaly gate a price/volume feed
     // runs before publishing): |x − median| > k·MAD flags, per series.
-    // Median and MAD come from the same histogram-bracket machinery as
+    // Median and MAD come from the same log-bucket kernel as
     // A14 — both snapped to the 6-decimal gate grid before the flag pass,
     // so the threshold is one literal and flagging is a single narrow
     // scan + aggregation. stddev-based z-scores would let one corrupt
@@ -824,26 +786,12 @@ object Relational {
       (s, d) => {
         // same fused 3-job shape as a14 (histogram + two leaf scans, the
         // deviation histogram derived driver-side), then one flag scan
-        import graft.operators.{Quantiles, Winsorize}
-        import graft.operators.Quantiles.round6
+        import graft.operators.Quantiles
         val ev = events(s, d).select(col("event_type"),
           col("value").cast(DoubleType).as("v"))
-        val base = Quantiles.projected(ev, "v")
-        val (med, mad) = Winsorize.medianAndMad(base, round6)
-          .map { case (m, md) => (m, round6(md)) }
-          .getOrElse {
-            // same no-doomed-retry fallback shape as a14 (ADVICE r13)
-            val b = Quantiles.prepared(ev, "v")
-            try {
-              val st @ (n, mn, mx) = Quantiles.statsOf(b)
-              val m = round6(Quantiles.percentilesPrepared(
-                b, Seq(0.5), known = Some(st)).head)
-              val md = round6(Quantiles.percentilesPrepared(
-                b.select(abs(col("__v") - m).as("__v")), Seq(0.5),
-                known = Some((n, 0.0, math.max(mx - m, m - mn)))).head)
-              (m, md)
-            } finally b.unpersist(blocking = false)
-          }
+        val (med, mad0) =
+          Quantiles.medianAndMad(Quantiles.projected(ev, "v"), Quantiles.round6)
+        val mad = Quantiles.round6(mad0)
         ev.groupBy("event_type").agg(
           count(lit(1)).as("n"),
           sum(when(abs(col("v") - med) > 3.0 * mad, 1).otherwise(0))

@@ -615,7 +615,7 @@ object StreamingE2e {
     // W27 — STREAMING robust-threshold SPIKE flags e2e (the A15 anomaly
     // gate made continuous — the production split real monitoring uses):
     // the median/MAD thresholds are TRAINED BATCH-SIDE by the exact
-    // histogram-bracket quantiles (a stream cannot compute an exact
+    // log-bucket quantile kernel (a stream cannot compute an exact
     // global quantile online; production retrains per window/day), then
     // embedded as literals into the stream, where flagging is a pure
     // stateless narrow map and per-user tallies run in Complete mode —

@@ -112,11 +112,11 @@ class PlanAuditSpec extends SparkSpec {
     assert(p18.contains("ObjectHashAggregate"),
       s"a18's typed bitmap aggregate left ObjectHashAggregate:\n$p18")
     // a19's PUBLISHED plan is a 1-row literal projection by design (r13):
-    // the GK sketch, the exact 2-job bracket arm and the probe-rank gate
-    // all run during construction (their value semantics are gated by
-    // WinsorizeSpec's exactQuantiles tests + the DuckDB hash row); the
-    // returned frame must stay degenerate — a data-sized subtree
-    // reappearing here means the fused arm silently fell back
+    // the GK sketch, the exact 2-job kernel and the probe-rank gate all
+    // run during construction (their value semantics are gated by
+    // WinsorizeSpec's exact-over-a-projection test + the DuckDB hash
+    // row); the returned frame must stay degenerate — a data-sized
+    // subtree reappearing here means the gate moved back into the plan
     val p19 = plan("a19_approx_quantile_gate")
     assert(p19.contains("Range (0, 1") && p19.contains("exact_p50"),
       s"a19 plan is no longer the driver-assembled literal row:\n$p19")

@@ -7,8 +7,8 @@ import org.apache.spark.sql.types.DoubleType
 /** The exactness claim for the scale-safe quantile paths: both must be
   * BIT-IDENTICAL to Spark's percentile() (which r9 proved ≡ DuckDB
   * quantile_cont under the round-6 gate) on every distribution shape the
-  * bracket refinement can hit — uniform-ish, heavy ties, tiny n, single
-  * value, and a leaf forced through multiple histogram passes.
+  * kernel's narrowing can hit — uniform-ish, heavy ties, tiny n, single
+  * value, and a rank forced through multiple narrowing passes.
   */
 class QuantilesSpec extends SparkSpec {
 
@@ -31,12 +31,12 @@ class QuantilesSpec extends SparkSpec {
 
   test("bracket refinement survives heavy ties and forced refinement") {
     import spark.implicits._
-    // 90% of mass on one value (the bracket that cannot shrink by range),
-    // leafLimit 16 forces refinement passes even at this size
+    // 90% of mass on one value (the span that cannot shrink by range),
+    // leafLimit 16 forces narrowing passes even at this size
     val vals = (1 to 2000).map(i => if (i % 10 == 0) i.toDouble else 42.0)
     val df = vals.toDF("v")
     val ps = Seq(0.1, 0.5, 0.89, 0.95)
-    val got = Quantiles.percentiles(df, "v", ps, bins = 8, leafLimit = 16)
+    val got = Quantiles.percentiles(df, "v", ps, leafLimit = 16)
     val want = referencePs(df, "v", ps)
     assert(got == want, s"got $got want $want")
   }
@@ -69,15 +69,15 @@ class QuantilesSpec extends SparkSpec {
 
   test("astronomically wide domains refine without overflow") {
     import spark.implicits._
-    // (hi − lo) overflows Double.MaxValue — the regime where the naive
-    // width/edge/bin arithmetic turns Inf/NaN and the refinement either
-    // OOMs (a 'leaf' holding half the data) or misassigns bins
+    // (max − min) overflows Double.MaxValue — the regime where naive
+    // equal-width bin arithmetic over the whole range turns Inf/NaN; the
+    // log buckets and the per-bucket narrowing never span both signs
     val vals = (0 until 4000).map { i =>
       if (i % 2 == 0) -1.5e308 + i * 1.0e300 else 1.5e308 - i * 1.0e300
     }
     val df = vals.toDF("v")
     val ps = Seq(0.01, 0.5, 0.99)
-    val got = Quantiles.percentiles(df, "v", ps, bins = 16, leafLimit = 64)
+    val got = Quantiles.percentiles(df, "v", ps, leafLimit = 64)
     val want = referencePs(df, "v", ps)
     assert(got == want, s"got $got want $want")
   }
@@ -95,11 +95,11 @@ class QuantilesSpec extends SparkSpec {
   }
 
   test("refinement re-scans push their range conjunct in the REAL plans") {
-    // audits the predicates valuesAtRanks actually generates (not a
+    // audits the predicates the narrowing passes actually generate (not a
     // hand-built lookalike): capture every executed plan during a run
-    // forced through multiple refinement passes and require that some
-    // narrowed re-scan reached the parquet reader with a pushed range
-    // filter on the source column
+    // whose rank spans exceed leafLimit and require that some narrowing
+    // pass reached the parquet reader with a pushed range filter on the
+    // source column
     import org.apache.spark.sql.execution.QueryExecution
     val plans = scala.collection.mutable.ArrayBuffer[String]()
     val l = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -111,10 +111,9 @@ class QuantilesSpec extends SparkSpec {
     try {
       val df = graft.Tables.lineitem(spark, sfDir)
         .select(col("l_extendedprice").cast(DoubleType).as("p"))
-      // reuse=false exercises the extreme-scale arm (column too big to
-      // cache): each pass's range conjunct must reach the parquet reader
-      Quantiles.percentiles(df, "p", Seq(0.25, 0.75),
-        bins = 8, leafLimit = 32, reuse = false)
+      // leafLimit 4 sends both quartile ranks through narrowing passes;
+      // each pass's range conjunct must reach the parquet reader
+      Quantiles.percentiles(df, "p", Seq(0.25, 0.75), leafLimit = 4)
       def pushed = plans.synchronized {
         plans.exists(p => p.contains("PushedFilters") &&
           p.contains("GreaterThanOrEqual(l_extendedprice"))
@@ -127,17 +126,23 @@ class QuantilesSpec extends SparkSpec {
           plans.flatMap(_.linesIterator.filter(_.contains("FileScan")))
             .distinct.mkString("\n")
         }
-        s"no refinement scan pushed its range conjunct; saw ${plans.size} plans; scans:\n$scans"
+        s"no narrowing pass pushed its range conjunct; saw ${plans.size} plans; scans:\n$scans"
       })
     } finally spark.listenerManager.unregister(l)
   }
 
-  test("default percentiles decodes the source once, passes read the cache") {
-    // the reuse arm (default): stats pass + refinement passes all read
-    // the persisted single-column projection — a plan that reaches
-    // parquet WITHOUT going through InMemoryTableScan means a pass paid
-    // a fresh source decode (the a11 3-4x constant factor from r11)
+  test("dense single-bucket ranks narrow over several passes, exact") {
+    import spark.implicits._
     import org.apache.spark.sql.execution.QueryExecution
+    // 4000 values one ulp apart plus a tail at 1.005 — all one log bucket.
+    // The first equal-width pass leaves the dense run in one bin (a bin
+    // is ~5.5e9 ulps wide) and only the second separates its values, so
+    // every dense rank needs two narrowing passes under leafLimit 16
+    val u = math.ulp(1.0)
+    val vals = Seq.tabulate(4000)(i => 1.0 + i * u) ++ Seq.fill(1000)(1.005)
+    val df = vals.toDF("v").repartition(5)
+    val ps = Seq(0.1, 0.5, 0.79, 0.9)
+    val want = referencePs(df, "v", ps)
     val plans = scala.collection.mutable.ArrayBuffer[String]()
     val l = new org.apache.spark.sql.util.QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
@@ -146,22 +151,14 @@ class QuantilesSpec extends SparkSpec {
     }
     spark.listenerManager.register(l)
     try {
-      val df = graft.Tables.lineitem(spark, sfDir)
-        .select(col("l_extendedprice").cast(DoubleType).as("p"))
-      Quantiles.percentiles(df, "p", Seq(0.25, 0.75),
-        bins = 8, leafLimit = 32)
+      val got = Quantiles.percentiles(df, "v", ps, leafLimit = 16)
+      assert(got == want, s"got $got want $want")
+      // pass 1 + two narrowing passes + the region scan
       val deadline = System.currentTimeMillis + 15000
-      def snap = plans.synchronized { plans.toList }
-      while (snap.size < 2 && System.currentTimeMillis < deadline)
-        Thread.sleep(100) // listener events post asynchronously
-      val got = snap
-      assert(got.size >= 2, s"expected stats + refinement passes, saw ${got.size}")
-      val uncachedReads = got.filter(p =>
-        p.contains("FileScan parquet") && !p.contains("InMemoryTableScan"))
-      assert(uncachedReads.isEmpty,
-        s"a pass re-decoded parquet instead of the cache:\n${uncachedReads.mkString("\n---\n")}")
-      assert(got.exists(_.contains("InMemoryTableScan")),
-        "no pass read the cached projection at all")
+      while (plans.synchronized(plans.size) < 4 &&
+        System.currentTimeMillis < deadline) Thread.sleep(100)
+      assert(plans.synchronized(plans.size) >= 4,
+        s"expected >= 4 jobs, saw ${plans.size}")
     } finally spark.listenerManager.unregister(l)
   }
 

@@ -69,7 +69,7 @@ class RandomizedOpsSpec extends SparkSpec {
 
   test("bracket percentiles match percentile() on seeded random shapes") {
     // distribution shapes the fixed fixtures can miss: dense ties, heavy
-    // skew, negatives, sub-ulp clusters, and leafLimit/bins boundaries
+    // skew, negatives, sub-ulp clusters, and leafLimit boundaries
     val rnd = new scala.util.Random(1234)
     val shapes: Seq[Int => Double] = Seq(
       _ => rnd.nextDouble() * 1e6 - 5e5, // uniform incl. negatives
@@ -81,16 +81,14 @@ class RandomizedOpsSpec extends SparkSpec {
       val n = 500 + rnd.nextInt(1500)
       val df = Seq.tabulate(n)(gen).toDF("v")
       val ps = Seq(0.0, rnd.nextDouble(), 0.5, 0.97, 1.0)
-      val bins = 4 + rnd.nextInt(60)
-      val leaf = 8 + rnd.nextInt(100)
-      val got = Quantiles.percentiles(df, "v", ps,
-        bins = bins, leafLimit = leaf.toLong)
+      val leaf = 1 + rnd.nextInt(100)
+      val got = Quantiles.percentiles(df, "v", ps, leafLimit = leaf.toLong)
       val exprs = ps.map(p => org.apache.spark.sql.functions
         .expr(s"percentile(v, CAST($p AS DOUBLE))"))
       val r = df.agg(exprs.head, exprs.tail: _*).head()
       val want = ps.indices.map(r.getDouble)
       assert(got == want,
-        s"shape $si (n=$n bins=$bins leaf=$leaf): got $got want $want")
+        s"shape $si (n=$n leaf=$leaf): got $got want $want")
     }
   }
 

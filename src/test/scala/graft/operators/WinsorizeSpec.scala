@@ -30,6 +30,20 @@ class WinsorizeSpec extends SparkSpec {
     (c1, c2, nLow, nHigh, sum.doubleValue)
   }
 
+  /** Sequential (round6 median, round6 MAD) — a14's contract. */
+  private def refMad(vals: Seq[Double]): (Double, Double) = {
+    val s = vals.sorted.toArray
+    val n = s.length
+    def q(xs: Array[Double], p: Double): Double = {
+      val pos = p * (n - 1)
+      val lo = math.floor(pos).toInt; val hi = math.ceil(pos).toInt
+      if (lo == hi) xs(lo) else (hi - pos) * xs(lo) + (pos - lo) * xs(hi)
+    }
+    val med = Quantiles.round6(q(s, 0.5))
+    val dev = s.map(v => math.abs(v - med)).sorted
+    (med, Quantiles.round6(q(dev, 0.5)))
+  }
+
   private def run(vals: Seq[Double], pl: Double, ph: Double,
       leafLimit: Long = 1L << 16)
       : (Double, Double, Long, Long, Double) = {
@@ -76,35 +90,39 @@ class WinsorizeSpec extends SparkSpec {
     val rnd = new scala.util.Random(7)
     val vals = Seq.fill(3000)(rnd.nextDouble() * 10)
     // leafLimit=4 forces every bucket-span over the gate; the 4096-bin
-    // narrowing pass shrinks each span to a few rows, so the fused arm
-    // still runs (r13 — the r12 shape fell back whenever the data was
-    // denser than the leaf gate, which sf1 l_extendedprice is at p99)
+    // narrowing pass shrinks each span to a few rows (sf1
+    // l_extendedprice's p99 bucket is denser than the default gate)
     assert(run(vals, 0.05, 0.95, leafLimit = 4) == ref(vals, 0.05, 0.95))
   }
 
-  test("still-dense narrowed spans route to the fallback arm, exact") {
-    // two distinct values 1e-9 apart: the narrowing bins cannot split the
-    // 2000-row pile under leafLimit=4, so the fused arm must bail to the
-    // refine machinery (which leafs lo==hi brackets as constants)
+  test("piles of near-equal values narrow to single-valued spans, exact") {
+    // two distinct values 1e-9 apart share a log bucket: one narrowing
+    // pass puts each 2000-row pile in its own bin, and a single-valued
+    // span leafs however large its population (leafLimit=4)
     val vals = Seq.fill(2000)(1.0) ++ Seq.fill(2000)(1.0 + 1e-9) ++
       Seq.fill(100)(5.0)
     assert(run(vals, 0.25, 0.75, leafLimit = 4) == ref(vals, 0.25, 0.75))
   }
 
+  test("multi-pass narrowing keeps winsorize and MAD exact") {
+    import spark.implicits._
+    // 4000 values one ulp apart plus a tail at 1.005, all one log bucket:
+    // the dense ranks need two equal-width passes under leafLimit 16, and
+    // the deviation round a log pass (its derived span starts at 0) then
+    // an equal-width one
+    val u = math.ulp(1.0)
+    val vals = Seq.tabulate(4000)(i => 1.0 + i * u) ++ Seq.fill(1000)(1.005)
+    for ((pl, ph) <- Seq((0.1, 0.79), (0.25, 0.9)))
+      assert(run(vals, pl, ph, leafLimit = 16) == ref(vals, pl, ph),
+        s"diverged at ($pl, $ph)")
+    val base = Quantiles.projected(vals.toDF("v").repartition(5), "v")
+    val (m, md) = Quantiles.medianAndMad(base, Quantiles.round6,
+      leafLimit = 16)
+    assert((m, Quantiles.round6(md)) == refMad(vals))
+  }
+
   test("medianAndMad matches the sequential reference (incl. narrowing)") {
     import spark.implicits._
-    def refMad(vals: Seq[Double]): (Double, Double) = {
-      val s = vals.sorted.toArray
-      val n = s.length
-      def q(xs: Array[Double], p: Double): Double = {
-        val pos = p * (n - 1)
-        val lo = math.floor(pos).toInt; val hi = math.ceil(pos).toInt
-        if (lo == hi) xs(lo) else (hi - pos) * xs(lo) + (pos - lo) * xs(hi)
-      }
-      val med = Quantiles.round6(q(s, 0.5))
-      val dev = s.map(v => math.abs(v - med)).sorted
-      (med, Quantiles.round6(q(dev, 0.5)))
-    }
     val rnd = new scala.util.Random(19)
     val shapes: Seq[Seq[Double]] = Seq(
       Seq.fill(2001)(rnd.nextDouble() * 200 - 100),
@@ -112,21 +130,18 @@ class WinsorizeSpec extends SparkSpec {
       Seq.fill(1999)(math.exp(rnd.nextGaussian() * 4)),
       Seq(42.0), Seq(1.0, 2.0))
     for ((vals, i) <- shapes.zipWithIndex;
-        limit <- Seq(1L << 16, 8L)) { // 8 forces the narrowing pass
+        limit <- Seq(1L << 16, 8L)) { // 8 forces the narrowing passes
       val base = Quantiles.projected(
         vals.toDF("v").repartition(5), "v")
-      val got = Winsorize.medianAndMad(base, Quantiles.round6,
-        leafLimit = limit).map { case (m, md) => (m, Quantiles.round6(md)) }
+      val (m, md) = Quantiles.medianAndMad(base, Quantiles.round6,
+        leafLimit = limit)
       val want = refMad(vals)
-      // None (dense even after narrowing) is allowed only at the tiny
-      // limit; when the arm answers, it must answer exactly
-      assert(got.forall(_ == want), s"shape $i limit $limit: $got vs $want")
-      if (limit == (1L << 16))
-        assert(got.contains(want), s"shape $i took the fallback unexpectedly")
+      assert((m, Quantiles.round6(md)) == want,
+        s"shape $i limit $limit: ${(m, md)} vs $want")
     }
   }
 
-  test("exactQuantiles: quantiles and probe ranks are exact") {
+  test("exact over a projection: quantiles and probe ranks are exact") {
     import spark.implicits._
     val rnd = new scala.util.Random(23)
     val vals = Seq.fill(3001)(math.rint(rnd.nextDouble() * 1000) / 4)
@@ -138,8 +153,7 @@ class WinsorizeSpec extends SparkSpec {
     }
     val probes = Seq(s(1500), -5.0, 2000.0, s(0), s.last, 333.333)
     val base = Quantiles.projected(vals.toDF("v").repartition(5), "v")
-    val Some((qs, ranks, n)) = Winsorize.exactQuantiles(
-      base, Seq(0.01, 0.5, 0.99), probes)
+    val (qs, ranks, n) = Quantiles.exact(base, Seq(0.01, 0.5, 0.99), probes)
     assert(n == vals.length)
     assert(qs == Seq(q(0.01), q(0.5), q(0.99)))
     assert(ranks == probes.map(x => vals.count(_ <= x).toLong),
