@@ -40,9 +40,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       messageParameters = Map("errorMessage" -> msg))
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // tier-(c) surface: the as-of join as a first-class logical node,
-    // lowered during analysis (see graft.plans.AsOfJoinPlan)
-    ext.injectResolutionRule(s => new graft.plans.ResolveAsOfJoin(s))
     ext.injectFunction((
       new FunctionIdentifier("vec_dot"),
       new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),

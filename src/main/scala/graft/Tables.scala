@@ -172,6 +172,10 @@ object Tables {
     * shuffle-partition count sized to the local core budget (not Spark's
     * default 200 — at 100 TB this is instead set to ~2-3× the executor core
     * count by the cluster conf), AQE for runtime coalescing/skew handling.
+    * The tuning keys below (shuffle partitions, AQE, advisory size, open
+    * cost, SMJ preference) are local defaults: a deployment's `-D<key>` or
+    * `spark-submit --conf <key>=…` wins, the same precedence
+    * `spark.local.dir` gets.
     */
   def configure(b: SparkSession.Builder, cpus: String): SparkSession.Builder = {
     // Scratch on tmpfs when the host has one (mirrors build.sbt's
@@ -197,16 +201,16 @@ object Tables {
     .config("spark.sql.extensions", "graft.GraftExtensions")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_PARTITIONS", cpus))
+      sys.props.getOrElse("spark.sql.shuffle.partitions", cpus))
     // AQE is a scale knob, not a universal win: each adaptive stage is a
     // materialization barrier + replan round-trip, which at interactive
     // (sub-second) stage sizes costs more than the coalescing saves —
     // measured 2x on the multi-stage shingle-family queries at sf0.1.
     // Default follows the deployment: ON for a real cluster run (the
-    // 100 TB path needs runtime coalescing + skew splits), overridable to
-    // OFF for latency-bound local work via SPARK_GRAFT_AQE=false.
+    // 100 TB path needs runtime coalescing + skew splits); latency-bound
+    // local work can pass -Dspark.sql.adaptive.enabled=false.
     .config("spark.sql.adaptive.enabled",
-      sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      sys.props.getOrElse("spark.sql.adaptive.enabled", "true"))
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
     // coalesce small shuffles all the way down to the size target instead
     // of stopping at defaultParallelism — with 32 local cores and small
@@ -219,10 +223,10 @@ object Tables {
     // keeps sub-4MB interactive stages fully coalesced (the latency win
     // parallelismFirst=false exists for) while giving ≥32-way parallelism
     // to any exchange past ~128 MB. A real cluster run should raise it
-    // back (SPARK_GRAFT_ADVISORY=64m) where per-task overhead amortizes
-    // across executors.
+    // back to 64m where per-task overhead amortizes across executors.
     .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "4m"))
+      sys.props.getOrElse(
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m"))
     // File-split sizing for CPU-heavy narrow ops over SMALL files: split
     // width is min(maxPartitionBytes, max(openCostInBytes, bytes/cores)),
     // so with the 4 MB openCost default a 4 MB parquet file is ONE task —
@@ -230,11 +234,11 @@ object Tables {
     // oracle at sf1 (r13 probe: 2.0 s serial, 0.3 s split 32 ways). 128 KB
     // keeps every table wider than ~4 MB split across all local cores
     // while the bytes/cores floor still bounds tiny files to ≤|cores|
-    // tasks. A many-small-files cluster lake should raise it back
-    // (SPARK_GRAFT_OPENCOST) — there the knob guards against task
-    // explosions, a local[32] single-file scan has no such risk.
+    // tasks. A many-small-files cluster lake should raise it back — there
+    // the knob guards against task explosions, a local[32] single-file
+    // scan has no such risk.
     .config("spark.sql.files.openCostInBytes",
-      sys.env.getOrElse("SPARK_GRAFT_OPENCOST", "131072"))
+      sys.props.getOrElse("spark.sql.files.openCostInBytes", "131072"))
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Shuffled-hash over sort-merge when the planner may choose (explicit
     // merge/broadcast hints still win — j9's demonstration twin keeps its
@@ -246,10 +250,9 @@ object Tables {
     // handles SHJ since Spark 3.2, so the safety argument for paying two
     // full sorts per join is gone at both test and cluster scale.
     // Measured on the fixed-text sql1_tpch_q3 at sf1: 0.90 s (SMJ) →
-    // 0.50 s (SHJ). Overridable (SPARK_GRAFT_PREFER_SMJ=true) for a
-    // memory-tight deployment.
+    // 0.50 s (SHJ). A memory-tight deployment sets it back to true.
     .config("spark.sql.join.preferSortMergeJoin",
-      sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
+      sys.props.getOrElse("spark.sql.join.preferSortMergeJoin", "false"))
     // TypedImperativeAggregates (collect_bounded) run under
     // ObjectHashAggregateExec, whose sort-based fallback triggers at a
     // DEFAULT of 128 distinct keys per task — sized for sketches holding

@@ -1,6 +1,7 @@
 package graft.lake
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,39 +24,26 @@ object Lake {
 
   val PartitionCols: Seq[String] = Seq("mercado", "id_mercado", "year", "month")
 
-  /** O1 sort key for partitioned writes: partition columns FIRST, then
-    * datetime. Sorting by datetime alone is not enough — FileFormatWriter
-    * inserts its own (non-stable) sort on the partition expressions when
-    * the incoming order doesn't already satisfy them, which scrambles the
-    * datetime order inside each file (caught by o1_sorted_write_e2e's
-    * per-file order audit under the driver gate). Leading with the
-    * partition columns satisfies the writer's requirement, so exactly ONE
-    * sort runs and every written file is datetime-ordered.
+  /** Partition columns below the `mercado=<m>` directory: one upsert
+    * writes exactly one mercado, so it writes into that directory and
+    * partitions by the rest. A literal `mercado` column would be foldable:
+    * the optimizer drops it from the caller's sort, and the planned write
+    * then re-sorts by the partition columns without `datetime_utc`,
+    * scrambling the O1 per-file datetime order.
     */
-  private def o1SortCols: Seq[Column] =
-    (PartitionCols :+ "datetime_utc").map(col)
+  private val WriteCols: Seq[String] = PartitionCols.filterNot(_ == "mercado")
 
-  /** Run a partitioned write with planned-write optimization OFF. With it
-    * on (the default), V1Writes inserts its own Sort on the partition
-    * columns and the optimizer then eliminates the caller's
-    * sortWithinPartitions as redundant — the replacement sort carries no
-    * datetime key, so the O1 per-file datetime order is silently lost
-    * (measured: 12 inverted rows in a 68-row fixture; 0 with the planned
-    * write off — caught by o1_sorted_write_e2e's order audit under the
-    * driver gate). Conf is restored in finally; queries in this engine
-    * run writes sequentially, so the session-scoped toggle never leaks
-    * into a concurrent plan.
+  /** O1 sort key for partitioned writes: partition columns FIRST, then
+    * datetime. Leading with the partition columns satisfies the writer's
+    * required ordering, so exactly ONE sort runs and every written file is
+    * datetime-ordered (o1_sorted_write_e2e audits the per-file order).
     */
-  private def withO1Write[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.optimizer.plannedWrite.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def o1SortCols: Seq[Column] = (WriteCols :+ "datetime_utc").map(col)
+
+  /** Sort and lay out one mercado's rows for a write into its directory. */
+  private def o1Write(df: DataFrame) =
+    layout(df.drop("mercado").sortWithinPartitions(o1SortCols: _*)
+      .write.partitionBy(WriteCols: _*))
 
   /** Derive year/month partition columns from datetime_utc and tag mercado.
     * ref: processed_file_utils.py:76-89
@@ -74,9 +62,6 @@ object Lake {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Idempotent upsert into the partitioned lake. `dedupKeys` empty ⇒
-    * append-only (the `continuo`/MIC rule, processed_file_utils.py:65-67).
-    */
   /** Physical parquet layout approximating the reference's writer settings
     * (processed_file_utils.py:25,349-357): zstd + 64 KiB pages are exact;
     * the reference's row_group_size=122880 ROWS has no Spark equivalent —
@@ -116,15 +101,17 @@ object Lake {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** Idempotent upsert into the partitioned lake. `dedupKeys` empty ⇒
+    * append-only (the `continuo`/MIC rule, processed_file_utils.py:65-67).
+    * Only the `mercado=<mercado>` directory is written; the overlap read
+    * and `read` see the whole lake at `path`.
+    */
   def upsert(spark: SparkSession, incoming: DataFrame, path: String,
       mercado: String, dedupKeys: Seq[String], precedenceCol: String): Unit = {
     val tagged = withPartitionCols(incoming, mercado)
+    val target = s"$path/mercado=${ExternalCatalogUtils.escapePathName(mercado)}"
     if (dedupKeys.isEmpty) { // append-only datasets (MIC): duplicates allowed
-      withO1Write(spark) {
-        layout(tagged.sortWithinPartitions(o1SortCols: _*)
-          .write.mode(SaveMode.Append).partitionBy(PartitionCols: _*))
-          .parquet(path)
-      }
+      o1Write(tagged).mode(SaveMode.Append).parquet(target)
       return
     }
     // incoming batches can carry intra-batch duplicates (re-downloads) —
@@ -140,16 +127,12 @@ object Lake {
           .select(tagged.columns.map(col): _*)
         keepLast(overlap.unionByName(tagged), dedupKeys, col(precedenceCol))
       }
-    withO1Write(spark) {
-      layout(merged
-        .sortWithinPartitions(o1SortCols: _*) // O1: sorted runs → better RLE + stats
-        .write.mode(SaveMode.Overwrite)
-        // per-write option, not a session-global conf mutation: only the
-        // partitions present in `merged` are replaced
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(PartitionCols: _*))
-        .parquet(path)
-    }
+    // O1: sorted runs → better RLE + stats. partitionOverwriteMode is a
+    // per-write option, not a session-global conf mutation: only the
+    // partitions present in `merged` are replaced
+    o1Write(merged).mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .parquet(target)
   }
 
   /** Partition-pruned read (S11): mercado/id/date-range predicates land on

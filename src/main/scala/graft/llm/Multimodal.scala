@@ -27,7 +27,9 @@ import org.apache.spark.sql.types._
   * µ-law payloads (JMF, the one Sun-era codec framework, is dead and was
   * never in the JDK). Those payloads fall back to `decodeStub`, a
   * clearly-marked deterministic fake keeping the schema/batch contract
-  * identical — swap it for a JNI/codec call in production.
+  * identical — swap it for a JNI/codec call in production. Frame sampling
+  * (`sampleFramesAvi`/`sampleFramesGif`) slices a payload it cannot demux
+  * into 4 KiB pseudo-frames with the same stride semantics.
   */
 object Multimodal {
 
@@ -431,7 +433,7 @@ object Multimodal {
 
   /** REAL image resize: decode with ImageIO, scale to (w, h) with bilinear
     * interpolation, re-encode as PNG. Non-image payloads pass through
-    * unchanged. Same mapPartitions streaming shape as the stubs.
+    * unchanged. Same mapPartitions streaming shape as `extractFeatures`.
     */
   def resizeImages(media: Dataset[MediaRow], w: Int, h: Int): Dataset[MediaRow] = {
     import media.sparkSession.implicits._
@@ -493,23 +495,8 @@ object Multimodal {
     })
   }
 
-  /** STUB resize — a real implementation decodes, scales to (w, h) and
-    * re-encodes; the stub deterministically truncates/pads the payload to
-    * the target byte budget so the batch shape (binary in → binary out,
-    * bounded size) is exercised end-to-end.
-    */
-  def resizeStub(media: Dataset[MediaRow], targetBytes: Int): Dataset[MediaRow] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map { r =>
-      val out = java.util.Arrays.copyOf(r.payload, targetBytes)
-      r.copy(payload = out)
-    })
-  }
-
-  /** STUB frame sampling — a real implementation demuxes video and emits
-    * one row per sampled frame; the stub slices the payload into
-    * `frames` deterministic chunks. One input row fans out to `frames`
-    * rows, the shape that matters for downstream partition sizing.
+  /** One sampled frame: `frame_idx` is the frame's index in the source
+    * (or the pseudo-frame index for payloads no demuxer reads).
     */
   case class FrameRow(doc_id: Long, frame_idx: Int, payload: Array[Byte])
 
@@ -548,20 +535,6 @@ object Multimodal {
       val to = math.min(from + pseudoFrameBytes, r.payload.length)
       FrameRow(r.doc_id, i, java.util.Arrays.copyOfRange(r.payload, from, to))
     }
-  }
-
-  /** STUB frame sampling for no-JDK-codec containers: the same STRIDE
-    * semantics as sampleFramesAvi/sampleFramesGif — keep every `every`-th
-    * pseudo-frame, frame_idx = original pseudo-frame index — over fixed
-    * 4 KiB payload slices (exactly the shared undecodable-payload
-    * fallback). r8's count-mode (`frames: Int` equal slices, indices
-    * always 0..frames-1) made the stub's output shape diverge from the
-    * real decode paths it stands in for (ADVICE r7/r8); a caller swapping
-    * in a real codec must see identical (doc_id, frame_idx) semantics.
-    */
-  def sampleFramesStub(media: Dataset[MediaRow], every: Int): Dataset[FrameRow] = {
-    import media.sparkSession.implicits._
-    media.flatMap(strideFallback(_, every))
   }
 
   /** Wrap a text/bytes table into the media shape (fixture path: the test

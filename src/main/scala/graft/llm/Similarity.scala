@@ -1309,23 +1309,4 @@ object Similarity {
               FROM scored) t
         WHERE rn <= $k"""
   }
-
-  /** Exact brute-force cosine top-k — the recall oracle for annTopK. */
-  def bruteForceTopK(embeddings: DataFrame,
-      queryPred: org.apache.spark.sql.Column, k: Int = 5): DataFrame = {
-    val e = embeddings.select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .withColumn("nrm", expr("sqrt(vec_dot(v, v))"))
-    val q = e.filter(queryPred)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-    val c = e.select(col("vec_id").as("cid"), col("v").as("cv"),
-      col("nrm").as("cn"))
-    val scored = q.join(c, col("qid") =!= col("cid"))
-      .withColumn("dot",
-        expr("vec_dot(qv, cv)"))
-      .withColumn("cos", col("dot") / (col("qn") * col("cn")))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select("qid", "cid", "cos", "rn")
-  }
 }

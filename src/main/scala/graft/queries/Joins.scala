@@ -376,34 +376,6 @@ object Joins {
               FROM facts f ASOF LEFT JOIN quotes q
                 ON f.user_id = q.user_id AND f.ts >= q.ts""")),
 
-    // J10 through the CUSTOM LOGICAL NODE (graft.plans.AsOfJoinPlan +
-    // the injected resolution rule): the same as-of semantics stated as
-    // a first-class plan node and lowered during analysis — identical
-    // oracle, so the tier-(c) path is itself hash-gated by the driver.
-    ("j10_asof_join_plan",
-      (s, d) => {
-        val ev = events(s, d)
-        val quotes = ev.filter(pmod(col("event_id"), lit(5)) === 0)
-          .groupBy(col("user_id"), col("ts")).agg(max(col("value")).as("price"))
-        val facts = ev.filter(pmod(col("event_id"), lit(5)) =!= 0)
-          .select(col("event_id"), col("user_id"), col("ts"),
-            col("value").as("vol"))
-        graft.plans.AsOfJoinPlan.build(facts, quotes, "user_id", "ts",
-          Seq("price"))
-          .select("event_id", "user_id", "ts", "vol", "price")
-      },
-      Some("""WITH quotes AS (
-                SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
-                       max(value) AS price
-                FROM events WHERE event_id % 5 = 0 GROUP BY 1, 2),
-              facts AS (
-                SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
-                       value AS vol
-                FROM events WHERE event_id % 5 <> 0)
-              SELECT f.event_id, f.user_id, f.ts, f.vol, q.price
-              FROM facts f ASOF LEFT JOIN quotes q
-                ON f.user_id = q.user_id AND f.ts >= q.ts""")),
-
     // J14 (additive) — NULL-SAFE equi-join (`<=>` / IS NOT DISTINCT
     // FROM): the join face ordinary equality silently drops — NULL keys
     // match each other. The reference's dim keys go NULL on unmapped

@@ -95,41 +95,6 @@ object Reader {
     precios.join(volumenes, Seq("datetime_utc", "id_mercado"), joinType)
       .withColumn("importe", col("precio") * col("volumenes"))
 
-  /** J9 with the SCALE default: when both fact tables exist as bucketed
-    * catalog tables (Lake.writeBucketed on the join key at ingest), join
-    * those — the plan carries no Exchange on the join keys because the
-    * shuffle was paid once at write time. Falls back to the given frames
-    * (by-name args stay unevaluated on the bucketed path). The most
-    * common reference query (the precios×volumenes CTE,
-    * read/natlanguage_duckdb_queries.py:254-275) thus gets the
-    * exchange-free layout whenever ingest provided it, without callers
-    * opting in.
-    */
-  def joinPreciosVolumenesAuto(spark: SparkSession,
-      preciosTable: String, volumenesTable: String,
-      precios: => DataFrame, volumenes: => DataFrame,
-      joinType: String = "inner"): DataFrame = {
-    // CONTENT CONTRACT: the named tables must be the ingest-time bucketed
-    // materialization of the same dataset the by-name fallback frames
-    // read — Lake.writeBucketed is the only writer of these names. The
-    // name check alone is not enough (ADVICE r11): a same-name table that
-    // is NOT bucketed on the join keys would silently forfeit the claimed
-    // exchange-free plan (or worse, be an unrelated stale table), so take
-    // the fast path only when the catalog metadata proves the layout.
-    def bucketedOnKeys(name: String): Boolean =
-      spark.catalog.tableExists(name) && {
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(name))
-        meta.bucketSpec.exists(bs =>
-          bs.bucketColumnNames.map(_.toLowerCase) ==
-            Seq("datetime_utc", "id_mercado"))
-      }
-    if (bucketedOnKeys(preciosTable) && bucketedOnKeys(volumenesTable))
-      joinPreciosVolumenes(
-        spark.table(preciosTable), spark.table(volumenesTable), joinType)
-    else joinPreciosVolumenes(precios, volumenes, joinType)
-  }
-
   /** W11 — 24-slot rolling mean over an ordered series, per market. */
   def rollingAvg(df: DataFrame, valueCol: String, slots: Int = 24): DataFrame = {
     val w = Window.partitionBy("id_mercado").orderBy("datetime_utc")

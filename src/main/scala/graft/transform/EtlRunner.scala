@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 /** Date-range × market driver loop — the shape of the reference's daily
   * DAG tasks (dags/ESIOS/esios_precios_etl_dag.py,
   * dags/i90/i90_volumenes_etl_dag.py:30-39) made a library call: each
-  * (day, market) leg runs independently (the MarketRunner isolation
-  * contract, transform/esios_transform.py:585-633), statuses land in a
+  * (day, market) leg runs independently — a failing leg is recorded and
+  * the remaining legs still run, as the reference's market loop does
+  * (transform/esios_transform.py:585-633) — statuses land in a
   * LEDGER the next run consults, and a retry pass re-executes only the
   * failed legs. Idempotence comes from the lake's keyed keep-last merge
   * (S7/A4): re-processing a leg overwrites its own rows and nothing else,

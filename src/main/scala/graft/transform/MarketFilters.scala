@@ -6,8 +6,7 @@ import org.apache.spark.sql.types._
 
 /** Config-driven market filter bank — SURVEY.md §2.2 (F2-F8).
   * The reference's per-market config classes (configs/i90_config.py:483-599)
-  * become plain data; the plan is a filtered union (Catalyst folds the
-  * shared scan) or an equivalent single-pass when-chain.
+  * become plain data; every leg is tagged in one single-pass when-chain.
   */
 object MarketFilters {
 
@@ -16,17 +15,9 @@ object MarketFilters {
     */
   final case class MarketLeg(id: Int, sentido: String, redespachos: Seq[String])
 
-  /** F3 as filter→tag→union (mirrors the reference's loop shape). */
-  def filterUnion(df: DataFrame, legs: Seq[MarketLeg],
-      sentidoCol: String, redespachoCol: String): DataFrame =
-    legs.map { l =>
-      df.filter(col(sentidoCol) === l.sentido &&
-          col(redespachoCol).isin(l.redespachos: _*))
-        .withColumn("id_mercado", lit(l.id).cast(ByteType))
-    }.reduce(_ unionByName _)
-
-  /** F3 as a single-pass when-chain — one scan, no union, same rows.
-    * Preferred at scale: the fact table is read once.
+  /** F3 as a single-pass when-chain: the fact table is read once, each
+    * row is tagged with the id of its leg (legs are disjoint on
+    * (sentido, redespacho)) and rows matching no leg are dropped.
     */
   def filterSinglePass(df: DataFrame, legs: Seq[MarketLeg],
       sentidoCol: String, redespachoCol: String): DataFrame = {
@@ -48,20 +39,10 @@ object MarketFilters {
 
   /** F4/F5 — literal map lookup with fail-on-unmapped (the reference raises
     * when an indicator has no market id, _procesador_esios.py:179-184).
-    * Returns the tagged frame; caller asserts `unmappedCount == 0`.
-    */
-  def mapLookup(df: DataFrame, keyCol: String, mapping: Map[String, Int]): DataFrame =
-    df.withColumn("id_mercado",
-      element_at(typedLit(mapping), col(keyCol)).cast(ByteType))
-
-  def unmappedCount(df: DataFrame): Long =
-    df.filter(col("id_mercado").isNull).count()
-
-  /** mapLookup with the fail-on-unmapped gate folded INTO the output
-    * expression: an unmapped key raises when the row is materialized, so
-    * the check costs zero extra jobs (vs. an eager `unmappedCount` scan of
-    * the whole input per run). The error expression lives inside the
-    * published column — column pruning can never elide it.
+    * The gate is folded INTO the output expression: an unmapped key raises
+    * when the row is materialized, so the check costs no extra job. The
+    * error expression lives inside the published column — column pruning
+    * can never elide it.
     */
   def mapLookupStrict(df: DataFrame, keyCol: String,
       mapping: Map[String, Int]): DataFrame = {

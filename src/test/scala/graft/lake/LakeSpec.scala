@@ -133,6 +133,40 @@ class LakeSpec extends SparkSpec {
     assert(after == before, "compaction changed row content")
   }
 
+  test("O1: every part file is datetime_utc-ordered after upserts and an append") {
+    val path = tmpDir() + "/o1"
+    // scrambled quarter-hours over two months and three ids: consecutive
+    // ids land far apart in time, so no input partition arrives sorted
+    def scrambled(n: Long, prec: Int, step: Long) = spark.range(n)
+      .select(
+        expr(s"""TIMESTAMP '2024-01-01 00:00:00' + make_interval(0, 0, 0, 0,
+                 0, CAST(((id * $step) % 5760) * 15 AS INT), 0)""")
+          .as("datetime_utc"),
+        (col("id") % 3 + 1).cast("int").as("id_mercado"),
+        (col("id") % 97).cast("double").as("precio"),
+        lit(prec).as("batch_id"))
+    val keys = Seq("datetime_utc", "id_mercado")
+    Lake.upsert(spark, scrambled(20000, 1, 7919), path, "diario", keys, "batch_id")
+    Lake.upsert(spark, scrambled(5000, 2, 104729), path, "diario", keys, "batch_id")
+    Lake.upsert(spark, scrambled(5000, 3, 7919), path, "continuo", Nil, "batch_id")
+    val r = spark.read.parquet(path)
+      .withColumn("f", input_file_name())
+      .withColumn("mid", monotonically_increasing_id())
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("f").orderBy("mid")
+    val (files, inversions) = r
+      .withColumn("prev_dt", lag(col("datetime_utc"), 1).over(w))
+      .agg(countDistinct(col("f")),
+        sum(when(col("prev_dt") > col("datetime_utc"), 1L).otherwise(0L)))
+      .as[(Long, Long)].head()
+    assert(files >= 6, s"expected one file per (mercado, id, month), got $files")
+    assert(inversions == 0, s"$inversions adjacent datetime_utc inversions")
+    // the per-mercado write keeps mercado a partition column on read-back
+    val perMercado = spark.read.parquet(path).groupBy("mercado").count()
+      .as[(String, Long)].collect().toMap
+    assert(perMercado("continuo") == 5000L)
+    assert(perMercado.keySet == Set("diario", "continuo"))
+  }
+
   test("S9 latest partition") {
     val path = tmpDir() + "/lake3"
     Lake.upsert(spark, batch(1,

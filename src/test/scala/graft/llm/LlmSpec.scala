@@ -8,7 +8,7 @@ class LlmSpec extends SparkSpec {
 
   test("ANN LSH bucketing: high recall vs brute force, far fewer pairs") {
     val emb = Tables.embeddings(spark, sfDir)
-    val exact = Similarity.bruteForceTopK(emb, col("vec_id") < 10, k = 5)
+    val exact = Similarity.bruteTopK(emb, col("vec_id") < 10, k = 5, roundScale = 15)
       .select("qid", "cid").as[(Long, Long)].collect().toSet
     val approx = Similarity.annTopK(emb, col("vec_id") < 10,
         nBits = 4, nTables = 3, k = 5)
@@ -20,7 +20,7 @@ class LlmSpec extends SparkSpec {
 
   test("PQ ANN: compressed-domain shortlist + refine recovers the exact top-k") {
     val emb = Tables.embeddings(spark, sfDir)
-    val exact = Similarity.bruteForceTopK(emb, col("vec_id") < 10, k = 5)
+    val exact = Similarity.bruteTopK(emb, col("vec_id") < 10, k = 5, roundScale = 15)
       .select("qid", "cid").as[(Long, Long)].collect().toSet
     val pq = Similarity.pqTopKFixed(emb, col("vec_id") < 10,
         dims = 64, m = 8, ksub = 16, shortlist = 60, k = 5, roundScale = 4)
@@ -34,7 +34,7 @@ class LlmSpec extends SparkSpec {
 
   test("IVF-PQ composition: list pruning bounds the ADC scan, refine keeps recall") {
     val emb = Tables.embeddings(spark, sfDir)
-    val exact = Similarity.bruteForceTopK(emb, col("vec_id") < 10, k = 5)
+    val exact = Similarity.bruteTopK(emb, col("vec_id") < 10, k = 5, roundScale = 15)
       .select("qid", "cid").as[(Long, Long)].collect().toSet
     val ivfpq = Similarity.ivfPqTopKFixed(emb, col("vec_id") < 10,
         nCentroids = 8, nProbe = 3, dims = 64, m = 8, ksub = 16,
@@ -54,7 +54,7 @@ class LlmSpec extends SparkSpec {
 
   test("IVF ANN: k-means lists give high recall without a cross join") {
     val emb = Tables.embeddings(spark, sfDir)
-    val exact = Similarity.bruteForceTopK(emb, col("vec_id") < 10, k = 5)
+    val exact = Similarity.bruteTopK(emb, col("vec_id") < 10, k = 5, roundScale = 15)
       .select("qid", "cid").as[(Long, Long)].collect().toSet
     val ivf = Similarity.ivfTopK(emb, col("vec_id") < 10,
         nLists = 8, nProbe = 3, k = 5)
@@ -99,21 +99,19 @@ class LlmSpec extends SparkSpec {
     assert(rows.forall(r => sqlMd5(r.doc_id) == r.checksum))
   }
 
-  test("multimodal resize and frame-sample stubs keep the batch shape") {
+  test("frame sampling strides payloads it cannot demux in 4 KiB pseudo-frames") {
     val media = Multimodal.fromDocuments(Tables.documents(spark, sfDir).limit(20))
-    val resized = Multimodal.resizeStub(media, targetBytes = 64).collect()
-    assert(resized.length == 20 && resized.forall(_.payload.length == 64))
     // stride semantics, shared with the real demux paths: every 2nd 4 KiB
     // pseudo-frame, frame_idx = original pseudo-frame index. The text
     // payloads are < 4 KiB → exactly one pseudo-frame each, index 0.
-    val frames = Multimodal.sampleFramesStub(media, every = 2)
+    val frames = Multimodal.sampleFramesAvi(media, every = 2)
     assert(frames.count() == 20)
     assert(frames.collect().forall(_.frame_idx == 0))
     // a 10 KiB payload has pseudo-frames 0,1,2 → stride 2 keeps 0 and 2,
-    // PRESERVING original indices (the count-mode stub renumbered them)
+    // PRESERVING original indices
     import spark.implicits._
     val big = Seq(Multimodal.MediaRow(99L, Array.fill[Byte](10240)(7), "video/x-raw")).toDS()
-    val bigIdx = Multimodal.sampleFramesStub(big, every = 2)
+    val bigIdx = Multimodal.sampleFramesAvi(big, every = 2)
       .collect().map(_.frame_idx).sorted
     assert(bigIdx.sameElements(Array(0, 2)))
   }

@@ -45,6 +45,26 @@ class AsOfJoinSpec extends SparkSpec {
     assert(got == Seq((20L, None, Some(9L))))
   }
 
+  test("as-of composition plans one fill window and at most two exchanges") {
+    val quotes = Seq(
+      (10L, ts("2024-01-01 09:55:00"), 1.5),
+      (10L, ts("2024-01-01 10:10:00"), 2.5),
+      (20L, ts("2024-01-01 10:05:00"), 7.0))
+      .toDF("k", "ts", "price")
+    val facts = Seq(
+      (1L, 10L, ts("2024-01-01 10:00:00")),
+      (2L, 10L, ts("2024-01-01 10:20:00")),
+      (3L, 20L, ts("2024-01-01 10:05:00")))
+      .toDF("event_id", "k", "ts")
+    val joined = AsOfJoin.asOf(facts, quotes, "k", "ts", Seq("price"))
+    assert(joined.select("event_id", "price").as[(Long, Option[Double])]
+      .collect().toMap == Map(1L -> Some(1.5), 2L -> Some(2.5), 3L -> Some(7.0)))
+    val p = joined.queryExecution.executedPlan.toString
+    assert(p.contains("Window"), s"as-of plan lost the fill window:\n$p")
+    assert(p.linesIterator.count(_.contains("Exchange ")) <= 2,
+      s"as-of plan pays unexpected exchanges:\n$p")
+  }
+
   test("quote columns clashing with fact columns are rejected") {
     val q = Seq((1L, ts("2024-01-01 10:00:00"), 1.0)).toDF("k", "t", "v")
     val f = Seq((1L, ts("2024-01-01 10:30:00"), 2.0)).toDF("k", "t", "v")

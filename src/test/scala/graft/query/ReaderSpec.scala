@@ -20,56 +20,4 @@ class ReaderSpec extends SparkSpec {
       Reader.indicatorFor("nope", LocalDate.parse("2024-01-01"))
     }
   }
-
-  test("joinPreciosVolumenesAuto prefers the bucketed layout, exchange-free") {
-    import org.apache.spark.sql.functions._
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val base = spark.range(0, 200)
-        .select(
-          expr("""TIMESTAMP '2024-05-01 00:00:00'
-                  + make_interval(0,0,0,0, CAST(id % 48 AS INT), 0, 0)""")
-            .as("datetime_utc"),
-          (col("id") % 3 + 1).cast("int").as("id_mercado"),
-          (col("id") % 17).cast("double").as("x"))
-      val p = base.dropDuplicates("datetime_utc", "id_mercado")
-        .withColumn("precio", col("x")).drop("x")
-      val v = base.withColumn("volumenes", col("x") * 2).drop("x")
-      graft.lake.Lake.writeBucketed(p, "b_precios",
-        Seq("datetime_utc", "id_mercado"), 4)
-      graft.lake.Lake.writeBucketed(v, "b_volumenes",
-        Seq("datetime_utc", "id_mercado"), 4)
-      val auto = Reader.joinPreciosVolumenesAuto(spark,
-        "b_precios", "b_volumenes",
-        sys.error("fallback must stay unevaluated"), v)
-      auto.write.format("noop").mode("overwrite").save()
-      val plan = auto.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"auto path still shuffles the join keys:\n$plan")
-      // same rows as the plain fallback join
-      val fallback = Reader.joinPreciosVolumenes(p, v)
-      assert(auto.count() == fallback.count())
-      assert(auto.except(fallback).isEmpty && fallback.except(auto).isEmpty)
-      // missing tables ⇒ the by-name fallback frames are used
-      val fb = Reader.joinPreciosVolumenesAuto(spark,
-        "no_such_p", "no_such_v", p, v)
-      assert(fb.count() == fallback.count())
-      // a same-name table WITHOUT the join-key bucketing must NOT be
-      // taken for the fast path (ADVICE r11: name existence alone could
-      // silently swap in a stale/unrelated table): metadata says plain
-      // ⇒ the caller's frames win
-      p.limit(1).write.mode("overwrite").saveAsTable("nb_precios")
-      v.limit(1).write.mode("overwrite").saveAsTable("nb_volumenes")
-      val nb = Reader.joinPreciosVolumenesAuto(spark,
-        "nb_precios", "nb_volumenes", p, v)
-      assert(nb.count() == fallback.count(),
-        "non-bucketed same-name tables must not shadow the caller's frames")
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS b_precios")
-      spark.sql("DROP TABLE IF EXISTS b_volumenes")
-      spark.sql("DROP TABLE IF EXISTS nb_precios")
-      spark.sql("DROP TABLE IF EXISTS nb_volumenes")
-    }
-  }
 }

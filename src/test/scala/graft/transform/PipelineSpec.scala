@@ -43,18 +43,20 @@ class PipelineSpec extends SparkSpec {
       .toDF("dt", "value", "indicador_id", "granularidad", "geo_name")
       .withColumn("datetime_utc", col("dt").cast("timestamp")).drop("dt")
     val path = tmpDir() + "/markets"
-    val (results, status) = MarketRunner.run(Seq("diario", "roto")) { m =>
-      val ind = if (m == "diario") 600 else 999 // 999 unmapped ⇒ raise_error
-      val out = EsiosTransform.transform(raw(ind)).withColumn("batch_id", lit(1))
-      Lake.upsert(spark, out, s"$path/$m", m,
-        Seq("datetime_utc", "id_mercado"), "batch_id")
-      out.count()
+    val day = java.time.LocalDate.parse("2024-07-15")
+    val statuses = EtlRunner.runLegs(Seq(day -> "diario", day -> "roto")) {
+      (_, m) =>
+        val ind = if (m == "diario") 600 else 999 // 999 unmapped ⇒ raise_error
+        val out = EsiosTransform.transform(raw(ind)).withColumn("batch_id", lit(1))
+        Lake.upsert(spark, out, s"$path/$m", m,
+          Seq("datetime_utc", "id_mercado"), "batch_id")
+        out.count()
     }
-    assert(status.processed == Seq("diario"))
-    assert(status.failed.keySet == Set("roto"))
-    assert(status.failed("roto").contains("unmapped"))
-    assert(!status.success) // a failed market marks the run unsuccessful
-    assert(results("diario") == 4L) // the good market still landed
+    val byMarket = statuses.map(st => st.market -> st).toMap
+    assert(statuses.filter(_.ok).map(_.market) == Seq("diario"))
+    assert(statuses.filterNot(_.ok).map(_.market) == Seq("roto"))
+    assert(byMarket("roto").error.contains("unmapped"))
+    assert(byMarket("diario").rows == 4L) // the good market still landed
     assert(Lake.read(spark, s"$path/diario").count() == 4)
   }
 
