@@ -11,15 +11,30 @@ object Ingest {
 
   /** S3 — wide hourly sheet → long table (the reference's pd.melt,
     * _descargador_i90.py:197-304): id columns stay, each hour column
-    * becomes a (hora, value) row. Spark-native unpivot keeps this inside
-    * codegen (no per-row logic), and value-null rows are dropped like the
+    * becomes a (hora, value) row, and value-null rows are dropped like the
     * reference's dropna.
+    *
+    * One generator, not `unpivot`: a sheet wider than
+    * `spark.sql.codegen.maxFields` (100; the I90 sheet has 131 columns)
+    * runs `unpivot` as an interpreted Expand, which builds one generated
+    * projection per value column in every task. Past 100 value columns
+    * those classes cycle through the 100-entry codegen cache
+    * (`spark.sql.codegen.cache.maxEntries`), so every task recompiles most
+    * of them. `inline(array(struct(name, value), …))` is one expression
+    * per row instead. The value type is the one `unpivot` resolves to (its
+    * analyzer's wider type, without string promotion): the unpivot is only
+    * analyzed for it, never run.
     */
   def melt(df: DataFrame, idCols: Seq[String], valueCols: Seq[String],
-      varName: String = "hora", valName: String = "volumenes"): DataFrame =
-    df.unpivot(idCols.map(col).toArray, valueCols.map(col).toArray,
-        varName, valName)
-      .filter(col(valName).isNotNull)
+      varName: String = "hora", valName: String = "volumenes"): DataFrame = {
+    def q(c: String) = col("`" + c.replace("`", "``") + "`")
+    val valueType = df.unpivot(idCols.map(q).toArray, valueCols.map(q).toArray,
+      varName, valName).schema(valName).dataType
+    val pairs = valueCols.map(c =>
+      struct(lit(c).as(varName), q(c).cast(valueType).as(valName)))
+    df.select(idCols.map(q) :+ inline(array(pairs: _*)): _*)
+      .filter(q(valName).isNotNull)
+  }
 
   /** F11 companion — drop NA/0 values post-melt (sparsity optimization,
     * _descargador_i90.py:286-292).

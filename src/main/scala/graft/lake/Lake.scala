@@ -35,14 +35,16 @@ object Lake {
 
   /** O1 sort key for partitioned writes: partition columns FIRST, then
     * datetime. Leading with the partition columns satisfies the writer's
-    * required ordering, so exactly ONE sort runs and every written file is
-    * datetime-ordered (o1_sorted_write_e2e audits the per-file order).
+    * required ordering, so every written file is datetime-ordered
+    * (o1_sorted_write_e2e audits the per-file order) and a write sorts
+    * once: the append sorts here, and the upsert's keep-last window
+    * already sorts in this order, so Spark drops this sort as redundant.
     */
-  private def o1SortCols: Seq[Column] = (WriteCols :+ "datetime_utc").map(col)
+  private val O1Keys: Seq[String] = WriteCols :+ "datetime_utc"
 
   /** Sort and lay out one mercado's rows for a write into its directory. */
   private def o1Write(df: DataFrame) =
-    layout(df.drop("mercado").sortWithinPartitions(o1SortCols: _*)
+    layout(df.drop("mercado").sortWithinPartitions(O1Keys.map(col): _*)
       .write.partitionBy(WriteCols: _*))
 
   /** Derive year/month partition columns from datetime_utc and tag mercado.
@@ -105,6 +107,17 @@ object Lake {
     * append-only (the `continuo`/MIC rule, processed_file_utils.py:65-67).
     * Only the `mercado=<mercado>` directory is written; the overlap read
     * and `read` see the whole lake at `path`.
+    *
+    * A key is deduplicated within its leaf partition, as the reference
+    * deduplicates per partition file: the keep-last keys lead with
+    * `(id_mercado, year, month, datetime_utc)`, which changes no key that
+    * already holds `id_mercado` and `datetime_utc` (year and month are
+    * functions of it). The merge runs as one exchange keyed by the leaf
+    * partition, numbered with the session's `spark.sql.shuffle.partitions`
+    * so that AQE cannot fold the write into one task, and one sort: the
+    * keep-last window's sort is already the O1 order, so the writer sorts
+    * no more. Each leaf partition lives in exactly one task, so a write
+    * leaves one file per leaf partition.
     */
   def upsert(spark: SparkSession, incoming: DataFrame, path: String,
       mercado: String, dedupKeys: Seq[String], precedenceCol: String): Unit = {
@@ -116,20 +129,21 @@ object Lake {
     }
     // incoming batches can carry intra-batch duplicates (re-downloads) —
     // keep-last applies to the batch itself as well as the merge
-    val merged =
-      if (!pathExists(spark, path))
-        keepLast(tagged, dedupKeys, col(precedenceCol))
+    val rows =
+      if (!pathExists(spark, path)) tagged
       else {
         val existing = spark.read.parquet(path)
         // prune the existing side to only the partitions the batch touches
         val touched = tagged.select(PartitionCols.map(col): _*).distinct()
-        val overlap = existing.join(broadcast(touched), PartitionCols, "left_semi")
+        existing.join(broadcast(touched), PartitionCols, "left_semi")
           .select(tagged.columns.map(col): _*)
-        keepLast(overlap.unionByName(tagged), dedupKeys, col(precedenceCol))
+          .unionByName(tagged)
       }
-    // O1: sorted runs → better RLE + stats. partitionOverwriteMode is a
-    // per-write option, not a session-global conf mutation: only the
-    // partitions present in `merged` are replaced
+    val merged = keepLast(
+      graft.Tables.pinnedRepartition(rows, WriteCols.map(col): _*),
+      O1Keys ++ dedupKeys.filterNot(O1Keys.contains), col(precedenceCol))
+    // partitionOverwriteMode is a per-write option, not a session-global
+    // conf mutation: only the partitions present in `merged` are replaced
     o1Write(merged).mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .parquet(target)

@@ -45,12 +45,8 @@ object EsiosTransform {
       "datetime_utc", "precio", divideValue = false) // prices replicate
     val quarter = priced.filter(col("granularidad") =!= "Hora")
     // F10 finalize + F12 validate
-    // sortWithinPartitions, not orderBy: a global sort is a full range-
-    // partition shuffle bought purely for cosmetic row order — the lake
-    // writer re-sorts within partitions at write time anyway
     val fin = hourly.unionByName(quarter)
       .select("datetime_utc", "id_mercado", "precio")
-      .sortWithinPartitions("datetime_utc")
     Schemas.validate(fin, Schemas.precios)
   }
 }

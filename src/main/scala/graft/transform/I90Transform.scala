@@ -59,7 +59,6 @@ object I90Transform {
     val fin = std
       .withColumnRenamed("Unidad de Programación", "up")
       .select("datetime_utc", "up", "volumenes", "id_mercado")
-      .sortWithinPartitions("datetime_utc", "up") // no global-sort shuffle
     Schemas.validate(fin, Schemas.volumenesI90)
   }
 
@@ -78,7 +77,6 @@ object I90Transform {
     val fin = std
       .withColumn("precio", round(col("precios"), 2)) // price standardization
       .select("datetime_utc", "id_mercado", "precio")
-      .sortWithinPartitions("datetime_utc") // no global-sort shuffle
     Schemas.validate(fin, Schemas.precios)
   }
 

@@ -43,8 +43,7 @@ object OmieTransform {
       .groupBy(col("datetime_utc"), col("uof"))
       .agg(sum(col("volumenes")).as("volumenes"))
       .withColumn("id_mercado", lit(idMercado).cast(ByteType))
-    Schemas.validate( // within-partition order only: no global-sort shuffle
-      rolled.sortWithinPartitions("datetime_utc", "uof"), Schemas.volumenesOmie)
+    Schemas.validate(rolled, Schemas.volumenesOmie)
   }
 
   /** Continuo / MIC trades: contract code → delivery datetime; trade grain

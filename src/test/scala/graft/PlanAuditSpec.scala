@@ -223,8 +223,8 @@ class PlanAuditSpec extends SparkSpec {
         "esios" -> EsiosTransform.transform(esiosRaw),
         "omie" -> OmieTransform.transform(omieRaw, 1, quarterHourly = false))) {
       val p = df.queryExecution.executedPlan.toString
-      // global Sort materializes as a range-partitioning exchange; the
-      // within-partition sort we allow shows as Sort [...], false
+      // a global Sort materializes as a range-partitioning exchange; the
+      // transforms leave row order to the lake write, which sorts once
       assert(!p.contains("rangepartitioning"),
         s"$name transform plan buys a global sort:\n$p")
     }

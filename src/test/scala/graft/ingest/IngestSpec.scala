@@ -1,6 +1,7 @@
 package graft.ingest
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -18,6 +19,60 @@ class IngestSpec extends SparkSpec {
       .select("volumenes").as[Double].head()
     assert(r == 2.5)
     assert(long.columns.sameElements(Array("up", "fecha", "hora", "volumenes")))
+  }
+
+  /** The engine's melt before it became one generator: `unpivot`. */
+  private def unpivotMelt(df: DataFrame, ids: Seq[String], values: Seq[String],
+      varName: String, valName: String) =
+    df.unpivot(ids.map(col).toArray, values.map(col).toArray, varName, valName)
+      .filter(col(valName).isNotNull)
+
+  private def sameMultiset(a: DataFrame, b: DataFrame): Unit = {
+    assert(a.schema.map(f => (f.name, f.dataType)) ==
+      b.schema.map(f => (f.name, f.dataType)))
+    assert(a.count() == b.count())
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+  }
+
+  test("S3 melt equals unpivot on a 131-column I90-shaped sheet, without Expand") {
+    val ids = Seq("Unidad de Programación", "fecha", "Sentido", "Redespacho",
+      "granularity")
+    val values = (0 until 24).map(h => f"$h%02d-${h + 1}%02d") ++
+      Seq("02-03a", "02-03b") ++ (1 to 100).map(_.toString)
+    val wide = spark.range(60).select(Seq(
+        concat(lit("UP"), (col("id") % 7).cast(StringType)).as(ids(0)),
+        date_add(lit("2024-03-30").cast(DateType), (col("id") % 3).cast(IntegerType))
+          .as(ids(1)),
+        when(col("id") % 2 === 0, "Subir").otherwise("Bajar").as(ids(2)),
+        lit("Terciaria").as(ids(3)),
+        when(col("id") % 4 === 0, "Quince minutos").otherwise("Hora").as(ids(4))) ++
+      values.zipWithIndex.map { case (c, i) =>
+        when((col("id") + i) % 5 === 0, lit(null).cast(DoubleType))
+          .otherwise(col("id") * 1.5 + i).as(c)
+      }: _*)
+    val melted = Ingest.melt(wide, ids, values)
+    val reference = unpivotMelt(wide, ids, values, "hora", "volumenes")
+    assert(melted.columns.toSeq == ids ++ Seq("hora", "volumenes"))
+    assert(melted.count() == 60L * 126 - 60L * 126 / 5) // every 5th cell null
+    sameMultiset(melted, reference)
+    // past spark.sql.codegen.maxFields unpivot is an interpreted Expand
+    assert(reference.queryExecution.executedPlan.toString.contains("Expand"))
+    val plan = melted.queryExecution.executedPlan.toString
+    assert(!plan.contains("Expand"), s"melt still expands:\n$plan")
+  }
+
+  test("S3 melt widens mixed value columns to unpivot's type") {
+    val df = Seq((1, Some(2), Some(2.5), BigDecimal("3.25")),
+        (2, None, Some(7.0), BigDecimal("-1.50")),
+        (3, Some(4), None, null))
+      .toDF("k", "i", "d", "dec")
+      .withColumn("dec", col("dec").cast(DecimalType(10, 2)))
+    for ((values, widened) <- Seq(Seq("i", "d") -> DoubleType,
+        Seq("i", "dec") -> DecimalType(12, 2))) {
+      val melted = Ingest.melt(df, Seq("k"), values, "v", "x")
+      assert(melted.schema("x").dataType == widened)
+      sameMultiset(melted, unpivotMelt(df, Seq("k"), values, "v", "x"))
+    }
   }
 
   test("F11 zero pruning after melt") {

@@ -167,6 +167,53 @@ class LakeSpec extends SparkSpec {
     assert(perMercado.keySet == Set("diario", "continuo"))
   }
 
+  test("upsert writes one file per leaf partition through one exchange and one sort") {
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val writes = scala.collection.mutable.ArrayBuffer[SparkPlan]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (qe.executedPlan.toString.contains("InsertIntoHadoopFsRelationCommand"))
+          writes.synchronized { writes += qe.executedPlan }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val path = tmpDir() + "/shape"
+    // a fresh target, 2 ids × 2 months (Jan–Feb 2024), scrambled input order
+    val df = spark.range(4000).select(
+      expr("""TIMESTAMP '2024-01-01 00:00:00' + make_interval(0, 0, 0, 0,
+              0, CAST(((id * 7919) % 5760) * 15 AS INT), 0)""").as("datetime_utc"),
+      (col("id") % 2 + 1).cast("int").as("id_mercado"),
+      (col("id") % 97).cast("double").as("precio"),
+      lit(1).as("batch_id"))
+    spark.listenerManager.register(l)
+    try {
+      Lake.upsert(spark, df, path, "diario", Seq("datetime_utc", "id_mercado"),
+        "batch_id")
+      val deadline = System.currentTimeMillis + 15000
+      while (writes.synchronized(writes.isEmpty) &&
+        System.currentTimeMillis < deadline) Thread.sleep(100)
+    } finally spark.listenerManager.unregister(l)
+    val leaves = for {
+      id <- 1 to 2; month <- 1 to 2
+    } yield new java.io.File(s"$path/mercado=diario/id_mercado=$id/year=2024/month=$month")
+    for (leaf <- leaves)
+      assert(leaf.listFiles().count(_.getName.endsWith(".parquet")) == 1,
+        s"$leaf: ${leaf.listFiles().map(_.getName).mkString(", ")}")
+    assert(spark.read.parquet(path).count() == 4000)
+    val plan = writes.synchronized(writes.toList) match {
+      case p :: Nil => p
+      case ps => fail(s"expected one write, saw ${ps.size}")
+    }
+    val helper = new AdaptiveSparkPlanHelper {}
+    val sorts = helper.collect(plan) { case s: SortExec => s }
+    assert(sorts.size == 1, s"expected one Sort in the write:\n$plan")
+    val exchanges = helper.collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.map(_.outputPartitioning.numPartitions) ==
+      Seq(spark.conf.get("spark.sql.shuffle.partitions").toInt),
+      s"expected one numbered partition-keyed exchange:\n$plan")
+  }
+
   test("S9 latest partition") {
     val path = tmpDir() + "/lake3"
     Lake.upsert(spark, batch(1,
