@@ -30,15 +30,14 @@ object Tables {
 
   /** `events.parquet` has shipped with two physical types for `ts` across
     * testdata generations: TIMESTAMP(NANOS) (which Spark's parquet reader
-    * only exposes as raw longs under `nanosAsLong`) and plain
-    * timestamp[us]. Dispatch on the LOADED dtype so both generations read
-    * identically: the nanos-long generation is truncated to micros —
+    * only exposes as raw longs under `nanosAsLong`, set by `configure`) and
+    * plain timestamp[us]. Dispatch on the LOADED dtype so both generations
+    * read identically: the nanos-long generation is truncated to micros —
     * exactly what DuckDB's `CAST(ts AS TIMESTAMP)` does on TIMESTAMP_NS —
     * and the micros generation is cast straight to session-TZ TIMESTAMP
     * (UTC here), matching the same DuckDB cast.
     */
   def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(s, dir, "events")
     val ts = raw.schema("ts").dataType match {
       case LongType => expr("timestamp_micros(ts div 1000)")
@@ -95,77 +94,46 @@ object Tables {
     df.repartition(
       df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, cols: _*)
 
-  /** ENGINE-WIDE intermediate-materialization policy (VERDICT r16 item 4:
-    * one switch, not ~50 hardcoded calls). Shared intermediates in the
-    * query paths materialize through `.mat()`:
-    *
-    *  - default: `localCheckpoint` — blocks are EXECUTOR-LOCAL and lineage
-    *    is truncated, so on a real cluster an executor loss mid-query
-    *    fails the job (retry-at-job-level policy). Right for the
-    *    single-node bench and for clusters that prefer job retry over
-    *    checkpoint I/O.
-    *  - `SPARK_GRAFT_RELIABLE_CHECKPOINT=1`: the SAME sites route to
-    *    reliable `checkpoint()` files (checkpoint dir auto-set under the
-    *    scratch dir unless the deployment already set one), so a lost
-    *    executor recomputes from the checkpoint instead of killing the
-    *    query. Results are identical in both modes — MatPolicySpec pins a
-    *    checkpoint-heavy row bit-for-bit across them. Reliable-checkpoint
-    *    files are freed by Spark only with
-    *    `spark.cleaner.referenceTracking.cleanCheckpoints=true` (a
-    *    cluster deployment should set it); the default mode's blocks are
-    *    freed by unpersist, as Bench/Verify already do between queries.
+  /** ENGINE-WIDE intermediate-materialization policy: every shared
+    * intermediate in the query paths materializes through `.mat()`, which
+    * is `localCheckpoint` — blocks are EXECUTOR-LOCAL and lineage is
+    * truncated. On a cluster an executor lost mid-query fails the query
+    * loudly and the caller retries the job: no result changes and nothing
+    * durable is lost (lake writes commit through their own path, never
+    * through a mat'd block). The blocks are freed by unpersist, as
+    * Bench/Verify do between queries.
     */
-  val reliableCheckpoint: Boolean =
-    sys.env.get("SPARK_GRAFT_RELIABLE_CHECKPOINT").contains("1")
-
-  // test hook (the Curation.LmModelMaxBigrams injectable precedent):
-  // MatPolicySpec flips the policy in-process to prove both modes produce
-  // identical results; production reads only the env val above
-  private[graft] var reliableCheckpointOverride: Option[Boolean] = None
-
   def mat(df: DataFrame, eager: Boolean = true): DataFrame =
-    if (!reliableCheckpointOverride.getOrElse(reliableCheckpoint))
-      df.localCheckpoint(eager)
-    else {
-      val sc = df.sparkSession.sparkContext
-      if (sc.getCheckpointDir.isEmpty)
-        sc.setCheckpointDir(s"$tmpDir/graft-ckpt")
-      df.checkpoint(eager)
-    }
+    df.localCheckpoint(eager)
 
   /** `df.mat()` / `df.mat(eager = false)` — sugar for `Tables.mat`. */
   implicit class GraftMatOps(private val df: DataFrame) {
     def mat(eager: Boolean = true): DataFrame = Tables.mat(df, eager)
   }
 
-  /** The fixture/scratch directory, resolved exactly once per JVM.
-    * Streaming e2e fixtures, Structured Streaming's auto-created
-    * checkpoint dirs, and the DuckDB-readable e2e fixtures land under
-    * java.io.tmpdir; a bare `java -cp … graft.Bench/Verify` (the driver's
-    * invocation) keeps the JVM default /tmp — ext4 here, where every
-    * streaming commit-log write pays a real fsync — so we point the
-    * property at tmpfs when the host has one. A single lazy val is the
-    * ordering guarantee: SparkEntry's oracle SQL strings interpolate the
-    * path at registry-init time while query lambdas read it at run time,
-    * and both go through here, so they agree no matter whether configure()
-    * or the query registry is touched first. Scope of the override: it
-    * reaches consumers that read the PROPERTY per call (our fixture paths,
-    * Spark's Utils.createTempDir for streaming checkpoints) but NOT
-    * java.io.File.createTempFile, which captures the dir at JVM startup on
-    * JDK 9+. An explicit -Djava.io.tmpdir to a non-/tmp path wins by
-    * construction; explicitly-meant /tmp is indistinguishable from the
-    * default, so SPARK_GRAFT_KEEP_TMPDIR=1 is the escape hatch.
-    */
-  lazy val tmpDir: String = {
+  /** `/dev/shm/graft-tmp` when the host has a writable tmpfs. */
+  private lazy val shmScratch: Option[String] = {
     val shm = new java.io.File("/dev/shm")
-    if (System.getProperty("java.io.tmpdir") == "/tmp" &&
-        !sys.env.contains("SPARK_GRAFT_KEEP_TMPDIR") &&
-        shm.isDirectory && shm.canWrite) {
+    if (shm.isDirectory && shm.canWrite) {
       val d = new java.io.File(shm, "graft-tmp")
       d.mkdirs()
-      System.setProperty("java.io.tmpdir", d.getAbsolutePath)
-      d.getAbsolutePath
-    } else System.getProperty("java.io.tmpdir")
+      Some(d.getAbsolutePath)
+    } else None
+  }
+
+  /** The fixture/scratch directory: e2e fixtures, the streaming rows'
+    * checkpoints and the DuckDB-readable fixture files land here. An
+    * explicit `-Djava.io.tmpdir` wins; the JVM default `/tmp` (a bare
+    * `java -cp … graft.Bench/Verify` invocation; on a disk-backed /tmp
+    * every streaming commit-log write pays a real fsync) resolves to tmpfs
+    * when the host has one — pass e.g. `-Djava.io.tmpdir=/tmp/graft` to keep
+    * scratch on disk. Read-only: the JVM-wide property is never rewritten.
+    * One lazy val, so oracle SQL strings interpolated at registry-init time
+    * and query lambdas run later always agree.
+    */
+  lazy val tmpDir: String = {
+    val jvm = System.getProperty("java.io.tmpdir")
+    if (jvm == "/tmp") shmScratch.getOrElse(jvm) else jvm
   }
 
   /** Session defaults shared by Verify and Bench mains: UTC semantics, a
@@ -185,18 +153,12 @@ object Tables {
     // every block write pays a real-disk fsync. Purely a local-harness
     // knob — a production cluster sets spark.local.dir itself — and an
     // explicit -Dspark.local.dir always wins.
-    val shm = new java.io.File("/dev/shm")
-    if (System.getProperty("spark.local.dir") == null &&
-        shm.isDirectory && shm.canWrite) {
-      val d = new java.io.File(shm, "graft-tmp")
-      d.mkdirs()
-      b.config("spark.local.dir", d.getAbsolutePath)
-    }
-    // Same treatment for java.io.tmpdir — resolved ONCE in the shared
-    // lazy val below so oracle SQL strings (interpolated at registry-init
-    // time) and query lambdas (run later) can never disagree on the
-    // fixture directory regardless of which side touches it first.
-    tmpDir
+    if (System.getProperty("spark.local.dir") == null)
+      shmScratch.foreach(b.config("spark.local.dir", _))
+    // embedded Derby (the s10 JDBC round trip) logs to the CWD unless told
+    // otherwise, and reads the property once, when its engine boots
+    if (System.getProperty("derby.stream.error.file") == null)
+      System.setProperty("derby.stream.error.file", s"$tmpDir/graft_derby.log")
     b
     .config("spark.sql.extensions", "graft.GraftExtensions")
     .config("spark.sql.session.timeZone", "UTC")

@@ -993,9 +993,9 @@ object LlmOps {
     */
   private val MinLabelDriverEdges = 200000L
 
-  // test hook (the reliableCheckpointOverride precedent): the
-  // differential spec forces the loop arm on a graph the driver arm
-  // would otherwise take, proving both arms produce identical labels
+  // test hook: the differential spec forces the loop arm on a graph the
+  // driver arm would otherwise take, proving both arms produce identical
+  // labels
   private[graft] var minLabelDriverMaxEdges: Option[Long] = None
 
   /** Driver-side min-label connected components: collect the (bounded)

@@ -1118,10 +1118,6 @@ object Pipelines {
     ("s10_jdbc_roundtrip_e2e",
       (s, d) => {
         val id = java.util.UUID.randomUUID.toString.replace("-", "")
-        // Derby writes its log relative to the CWD unless told otherwise —
-        // keep the repo clean
-        System.setProperty("derby.stream.error.file",
-          s"$tmpDir/graft_derby_$id.log")
         val url = s"jdbc:derby:memory:graft$id;create=true"
         val dim = supplier(s, d).select(col("s_suppkey").as("up_id"),
           col("s_name").as("up"), col("s_acctbal").as("saldo"))

@@ -18,6 +18,12 @@ import org.apache.spark.sql.types._
   * row) and the rollup runs in Complete mode (final per-window totals).
   * Follows the e2e driver-proofing rules (UUID paths, 2020s dates, dyadic
   * doubles, eager checkpoint, cleanup).
+  *
+  * Every row runs its stream on a session of its own ([[ownSession]]), with
+  * an explicit checkpoint under `Tables.tmpDir` deleted when the row ends:
+  * the settings a stream wants (one shuffle partition; RocksDB for w34)
+  * never touch the caller's session, so a batch query running concurrently
+  * on it keeps its partition count and state-store provider.
   */
 object StreamingE2e {
 
@@ -27,19 +33,56 @@ object StreamingE2e {
   // interpolated at registry-init time and lambdas run later always agree.
   private def tmpDir = graft.Tables.tmpDir
 
-  /** Run `body` with a single shuffle partition. Stateful streaming cost
-    * scales with partitions × micro-batches (every batch commits a state
-    * store per partition per stateful op — a stream-stream join keeps FOUR
-    * stores per partition); the fixtures here are a few thousand rows, so
-    * anything beyond one partition is pure commit overhead. The result SET
-    * is partition-count independent (and the driver sorts before hashing),
-    * so this is a pure latency knob.
+  /** A streaming row's own session: a child of the caller's with a single
+    * shuffle partition plus the row's `settings`. `newSession` shares the
+    * SparkContext and keeps the graft extensions and every builder/SparkConf
+    * setting (UTC, the tuned defaults of `Tables.configure`); the caller's
+    * own conf is never written. Stateful streaming cost scales with
+    * partitions × micro-batches (every batch commits a state store per
+    * partition per stateful op — a stream-stream join keeps FOUR stores per
+    * partition); the fixtures here are a few thousand rows, so anything
+    * beyond one partition is pure commit overhead. The result SET is
+    * partition-count independent (and the driver sorts before hashing).
     */
-  private def withFewPartitions[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "1")
-    try body finally s.conf.set(key, prev)
+  private[graft] def ownSession(caller: SparkSession,
+      settings: (String, String)*): SparkSession = {
+    val own = caller.newSession()
+    (("spark.sql.shuffle.partitions" -> "1") +: settings).foreach {
+      case (k, v) => own.conf.set(k, v)
+    }
+    own
+  }
+
+  private def deleteDir(s: SparkSession, dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+  }
+
+  /** Run `stream` (built on a row's own session) to completion into a
+    * memory sink with `Trigger.AvailableNow` and an explicit checkpoint,
+    * and return `result` of the sink, materialized. Finally-guarded: a
+    * failing stream must not leak the sink's temp view or its checkpoint
+    * (Bench catches per-query errors and keeps going — twice per query
+    * with the warm pass).
+    */
+  private def drain(stream: DataFrame, outputMode: String,
+      result: DataFrame => DataFrame = identity): DataFrame = {
+    val s = stream.sparkSession
+    val id = java.util.UUID.randomUUID.toString.replace("-", "")
+    val qn = s"graft_sink_$id"
+    val ckpt = s"$tmpDir/graft_ckpt_$id"
+    try {
+      stream.writeStream.format("memory").queryName(qn)
+        .outputMode(outputMode)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+      result(s.table(qn)).mat() // eager: the sink goes away
+    } finally {
+      try s.catalog.dropTempView(qn) catch { case _: Exception => () }
+      deleteDir(s, ckpt)
+    }
   }
 
   /** One-time fixture landing, memoized per (logical fixture, sf dir) for
@@ -110,9 +153,9 @@ object StreamingE2e {
   /** Land the fixture as two overlapping parquet files, run `transform`
     * over a file-source stream to completion, return the memory sink.
     */
-  private def runStream(s: SparkSession, d: String, name: String,
+  private def runStream(caller: SparkSession, d: String,
       outputMode: String)(transform: DataFrame => DataFrame): DataFrame = {
-    val id = java.util.UUID.randomUUID.toString.replace("-", "")
+    val s = ownSession(caller)
     // every runStream row drives the SAME two-file fixture: land it once
     // per (sf dir, JVM) and share read-only across rows and bench passes.
     // Files land with strictly-increasing pinned mtimes so batch 1 is the
@@ -139,23 +182,8 @@ object StreamingE2e {
       land(src.filter(col("event_id") % 2 === 0))
       land(src.filter(col("event_id") % 3 === 0))
     }
-    val qn = s"graft_sink_$id"
-    // finally-guarded: a failing stream must not leak the memory-sink
-    // temp view (Bench catches per-query errors and keeps going — twice
-    // per query with the warm pass)
-    try withFewPartitions(s) {
-      val q = transform(
-          s.readStream.schema(fixtureSchema).option("maxFilesPerTrigger", 1)
-            .parquet(dir))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode(outputMode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn).mat() // eager: sink goes away
-    } finally {
-      try s.catalog.dropTempView(qn) catch { case _: Exception => () }
-    }
+    drain(transform(s.readStream.schema(fixtureSchema)
+      .option("maxFilesPerTrigger", 1).parquet(dir)), outputMode)
   }
 
   val all: Seq[(String, Q, Option[String])] = Seq(
@@ -169,7 +197,7 @@ object StreamingE2e {
     // row — the bounded-key-space arm (StreamDedup's watermarked arm
     // covers unbounded keys in its spec).
     ("w13_stream_dedup_e2e",
-      (s, d) => runStream(s, d, "dedup", "append")(
+      (s, d) => runStream(s, d, "append")(
         _.dropDuplicates("user_id", "event_id", "ts", "amount")),
       Some(s"""WITH src AS ($fixtureSql)
                SELECT DISTINCT user_id, event_id, ts, amount
@@ -182,7 +210,7 @@ object StreamingE2e {
     // see re-deliveries; the dedup above is the cure, this op measures
     // what arrived), so the oracle unions both batch selections.
     ("w14_stream_rollup_e2e",
-      (s, d) => runStream(s, d, "rollup", "complete")(
+      (s, d) => runStream(s, d, "complete")(
         _.groupBy(window(col("ts"), "1 hour"), col("user_id"))
           .agg(count(lit(1)).as("n_events"), dsum2(col("amount")).as("total"))
           .select(col("window.start").as("ws"), col("window.end").as("we"),
@@ -205,7 +233,7 @@ object StreamingE2e {
     // from the overlapping files are counted (raw-ingest tier semantics,
     // as W14).
     ("w24_stream_hopping_e2e",
-      (s, d) => runStream(s, d, "hopping", "complete")(
+      (s, d) => runStream(s, d, "complete")(
         _.groupBy(window(col("ts"), "30 minutes", "15 minutes"))
           .agg(count(lit(1)).as("n"), dsum2(col("amount")).as("total"))
           .select(col("window.start").as("ws"), col("window.end").as("we"),
@@ -235,8 +263,8 @@ object StreamingE2e {
     // join exactly — micro-batch-order independent. Dyadic quarter values
     // keep precio·volumenes representation-stable in both engines.
     ("w15_stream_join_e2e",
-      (s, d) => withFewPartitions(s) {
-        val id = java.util.UUID.randomUUID.toString.replace("-", "")
+      (caller, d) => {
+        val s = ownSession(caller)
         val root = landOnce("joinpv", d) { root =>
           val fs = new org.apache.hadoop.fs.Path(root)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -291,23 +319,12 @@ object StreamingE2e {
           StructField("id_mercado", IntegerType),
           StructField("uof", StringType),
           StructField("volumenes", DoubleType)))
-        val qn = s"graft_sink_$id"
-        try {
-          val ps = s.readStream.schema(pSchema)
-            .option("maxFilesPerTrigger", 1).parquet(pdir)
-          val vs = s.readStream.schema(vSchema)
-            .option("maxFilesPerTrigger", 1).parquet(vdir)
-          val q = graft.streaming.StreamJoin
-            .joinPreciosVolumenes(ps, vs, lateness = "7 days")
-            .writeStream.format("memory").queryName(qn)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          s.table(qn).mat()
-        } finally {
-          try s.catalog.dropTempView(qn) catch { case _: Exception => () }
-        }
+        val ps = s.readStream.schema(pSchema)
+          .option("maxFilesPerTrigger", 1).parquet(pdir)
+        val vs = s.readStream.schema(vSchema)
+          .option("maxFilesPerTrigger", 1).parquet(vdir)
+        drain(graft.streaming.StreamJoin
+          .joinPreciosVolumenes(ps, vs, lateness = "7 days"), "append")
       },
       Some("""WITH base AS (
                 SELECT CAST(o_orderkey % 48 AS INTEGER) AS h,
@@ -348,8 +365,8 @@ object StreamingE2e {
     // stream stops. Deterministic because eviction depends only on event
     // time vs watermark, and every file's batch slot is pinned by mtime.
     ("w28_stream_outer_join_e2e",
-      (s, d) => withFewPartitions(s) {
-        val id = java.util.UUID.randomUUID.toString.replace("-", "")
+      (caller, d) => {
+        val s = ownSession(caller)
         val root = landOnce("oj", d) { root =>
           val fs = new org.apache.hadoop.fs.Path(root)
             .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -411,23 +428,12 @@ object StreamingE2e {
           StructField("id_mercado", IntegerType),
           StructField("uof", StringType),
           StructField("volumenes", DoubleType)))
-        val qn = s"graft_sink_$id"
-        try {
-          val ps = s.readStream.schema(pSchema)
-            .option("maxFilesPerTrigger", 1).parquet(pdir)
-          val vs = s.readStream.schema(vSchema)
-            .option("maxFilesPerTrigger", 1).parquet(vdir)
-          val q = graft.streaming.StreamJoin
-            .joinPreciosVolumenesOuter(ps, vs, lateness = "48 hours")
-            .writeStream.format("memory").queryName(qn)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          s.table(qn).mat()
-        } finally {
-          try s.catalog.dropTempView(qn) catch { case _: Exception => () }
-        }
+        val ps = s.readStream.schema(pSchema)
+          .option("maxFilesPerTrigger", 1).parquet(pdir)
+        val vs = s.readStream.schema(vSchema)
+          .option("maxFilesPerTrigger", 1).parquet(vdir)
+        drain(graft.streaming.StreamJoin
+          .joinPreciosVolumenesOuter(ps, vs, lateness = "48 hours"), "append")
       },
       Some("""WITH base AS (
                 SELECT CAST(o_orderkey % 48 AS INTEGER) AS h,
@@ -477,9 +483,9 @@ object StreamingE2e {
     // (strictly increasing) n_events. Bit-determinism: identical IEEE
     // fold sequence per key in stream, batch and oracle.
     ("w30_stream_ema_e2e",
-      (s, d) => withFewPartitions(s) {
+      (caller, d) => {
+        val s = ownSession(caller)
         import s.implicits._
-        val id = java.util.UUID.randomUUID.toString.replace("-", "")
         val dir = landOnce("ema", d) { dir =>
           val hp = new org.apache.hadoop.fs.Path(dir)
           val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -506,26 +512,14 @@ object StreamingE2e {
         val sch = StructType(Seq(
           StructField("user_id", LongType), StructField("event_id", LongType),
           StructField("ts", TimestampType), StructField("value", DoubleType)))
-        val qn = s"graft_sink_$id"
-        try {
-          val st = s.readStream.schema(sch)
-            .option("maxFilesPerTrigger", 1).parquet(dir)
-            .as[graft.streaming.Ema.Point]
-          val q = graft.streaming.Ema.emaStream(st)
-            .writeStream.format("memory").queryName(qn)
-            .outputMode("update")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          s.table(qn)
-            .groupBy(col("user_id"))
+        val st = s.readStream.schema(sch)
+          .option("maxFilesPerTrigger", 1).parquet(dir)
+          .as[graft.streaming.Ema.Point]
+        drain(graft.streaming.Ema.emaStream(st).toDF(), "update",
+          _.groupBy(col("user_id"))
             .agg(max(struct(col("n_events"), col("ema_last"))).as("m"))
             .select(col("user_id"), col("m.n_events").as("n_events"),
-              round(col("m.ema_last"), 6).as("ema_last"))
-            .mat()
-        } finally {
-          try s.catalog.dropTempView(qn) catch { case _: Exception => () }
-        }
+              round(col("m.ema_last"), 6).as("ema_last")))
       },
       Some("""WITH RECURSIVE s AS (
                 SELECT user_id, value,
@@ -564,7 +558,7 @@ object StreamingE2e {
     // checks the stream's own output.
     ("w18_stream_funnel_e2e",
       (s, d) => {
-        val sink = runStream(s, d, "funnel", "complete")(
+        val sink = runStream(s, d, "complete")(
           _.withColumn("tp", expr(
             """CASE CAST(event_id % 3 AS INT) WHEN 0 THEN 'signup'
                WHEN 1 THEN 'click' ELSE 'purchase' END"""))
@@ -637,7 +631,7 @@ object StreamingE2e {
             arrived.select(abs(col("a") - m).as("dev")), "dev",
             Seq(0.5)).head))
         })
-        runStream(s, d, "spike", "complete")(
+        runStream(s, d, "complete")(
           _.groupBy(col("user_id"))
             .agg(count(lit(1)).as("n"),
               sum(when(abs(col("amount") - med) > lit(3.0) * mad, 1)
@@ -672,20 +666,28 @@ object StreamingE2e {
     // MemoryStream (not a file source) pins the micro-batch boundaries:
     // addData is atomic, so each feed lands in ONE micro-batch and "first
     // arrival" is the ord-least row of a known row set, never a file-order
-    // artifact. Drive/settle protocol, learned the hard way (r13):
-    // ProcessingTime-mode TWS schedules micro-batches CONTINUOUSLY (TTL
-    // and timers must be able to fire without input), so BOTH standard
-    // completion waits are unusable here — `processAllAvailable` never
-    // settles, and `Trigger.AvailableNow`'s MultiBatchExecutor keeps
-    // requesting maintenance batches (observed: 1100+ empty batches and
-    // counting). Instead the query free-runs and the harness POLLS the
-    // sink for the exact expected row count per phase (known a priori
-    // from the fed keys), with a deadline and a post-condition grace so a
-    // wrong extra emission still fails the gate. One shuffle partition
-    // bounds the per-batch RocksDB commit count; the provider conf is
-    // restored afterwards whatever happens.
+    // artifact. Drive/settle protocol: the query free-runs and the harness
+    // POLLS the sink for the exact expected row count per phase (known a
+    // priori from the fed keys), with a deadline and a post-condition
+    // grace so a wrong extra emission still fails the gate. The row's own
+    // session picks RocksDB, one shuffle partition (bounds the per-batch
+    // RocksDB commit count) and no no-data micro-batches: ProcessingTime-
+    // mode TWS otherwise asks for a maintenance batch after EVERY batch
+    // (TTL and timers must be able to fire without input; under
+    // `Trigger.AvailableNow` observed as 1100+ empty batches and
+    // counting), so `processAllAvailable` would never settle and `stop()`
+    // would land mid-commit. TTL expiry needs no such batch — an expired
+    // value reads as absent in the next data batch. So once the sink
+    // holds its rows, `processAllAvailable` returns after the last batch
+    // committed, and `stop()` interrupts an idle query, never a RocksDB
+    // commit.
     ("w34_stream_ttl_dedup_e2e",
-      (s, d) => {
+      (caller, d) => {
+        val s = ownSession(caller,
+          "spark.sql.streaming.stateStore.providerClass" ->
+            ("org.apache.spark.sql.execution.streaming.state" +
+              ".RocksDBStateStoreProvider"),
+          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
         val enc = org.apache.spark.sql.Encoders.product[TtlE2eEvent]
         // fixture-derived batches, collected driver-side ONCE per sf dir
         // (the MemoryStream feed is driver data by construction; bounded
@@ -738,6 +740,7 @@ object StreamingE2e {
             if (settled != want2)             // not just hoped to surface
               throw new IllegalStateException(
                 s"$qn over-emitted: $settled rows after grace, want $want2")
+            q.processAllAvailable() // the last batch has committed
             q.stop()
             q.awaitTermination()
             s.table(qn).mat()
@@ -746,20 +749,12 @@ object StreamingE2e {
           } finally {
             try if (q.isActive) q.stop() catch { case _: Exception => () }
             try s.catalog.dropTempView(qn) catch { case _: Exception => () }
-            val hp = new org.apache.hadoop.fs.Path(ckpt)
-            hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-              .delete(hp, true)
+            deleteDir(s, ckpt)
           }
         }
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        s.conf.set(key, "org.apache.spark.sql.execution.streaming.state" +
-          ".RocksDBStateStoreProvider")
-        try withFewPartitions(s) {
-          face("long_ttl", java.time.Duration.ofHours(1), 0)
-            .unionByName(
-              face("short_ttl", java.time.Duration.ofMillis(100), 1200))
-        } finally prev.fold(s.conf.unset(key))(v => s.conf.set(key, v))
+        face("long_ttl", java.time.Duration.ofHours(1), 0)
+          .unionByName(
+            face("short_ttl", java.time.Duration.ofMillis(100), 1200))
       },
       Some(s"""WITH src AS ($fixtureSql),
                b1 AS (SELECT user_id, min(event_id) AS event_id

@@ -30,7 +30,9 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
   * evicts idle ones), and timed-out sessions are emitted exactly once.
   * `transformWithState` requires the RocksDB state-store provider —
   * callers (and the spec) set
-  * `spark.sql.streaming.stateStore.providerClass` before `start()`.
+  * `spark.sql.streaming.stateStore.providerClass` before `start()`, on a
+  * session they own (`spark.newSession()`, as the streaming e2e rows do),
+  * so a shared session's provider never changes under its other queries.
   */
 object Sessionize {
 

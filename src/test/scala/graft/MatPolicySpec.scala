@@ -1,50 +1,21 @@
 package graft
 
-/** The single-switch materialization policy (VERDICT r16 item 4): every
-  * shared-intermediate materialization routes through Tables.mat, which is
-  * localCheckpoint by default and reliable checkpoint() under
-  * SPARK_GRAFT_RELIABLE_CHECKPOINT=1. Both modes must produce identical
-  * results — proven here on the most checkpoint-heavy row (dedup
-  * clustering: pair-pipeline checkpoint + per-round loop checkpoints) and
-  * on a lazy-mat consumer (the funnel stages).
+/** The single materialization policy: every shared-intermediate
+  * materialization routes through Tables.mat, which is `localCheckpoint`.
   */
 class MatPolicySpec extends SparkSpec {
 
-  private def rows(name: String): Seq[String] = {
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    df.collect().map(_.toString).sorted.toSeq
-  }
-
-  private def inMode[A](reliable: Boolean)(f: => A): A = {
-    Tables.reliableCheckpointOverride = Some(reliable)
-    try f finally Tables.reliableCheckpointOverride = None
-  }
-
-  test("dedup clustering is bit-identical under both checkpoint modes") {
-    val local = inMode(reliable = false) { rows("llm_dedup_clusters") }
-    val reliable = inMode(reliable = true) { rows("llm_dedup_clusters") }
-    assert(local.nonEmpty)
-    assert(local == reliable)
-  }
-
-  test("funnel latency is bit-identical under both checkpoint modes") {
-    val local = inMode(reliable = false) { rows("w26_funnel_latency") }
-    val reliable = inMode(reliable = true) { rows("w26_funnel_latency") }
-    assert(local.nonEmpty)
-    assert(local == reliable)
-  }
-
-  test("reliable mode really checkpoints (lineage cut to a checkpoint scan)") {
+  test("Tables.mat cuts lineage to a local checkpoint") {
     import org.apache.spark.sql.functions._
-    inMode(reliable = true) {
-      val df = Tables.mat(spark.range(10).toDF("v")
-        .withColumn("w", col("v") * 2))
-      // a reliably-checkpointed frame scans checkpoint files, so its RDD
-      // lineage bottoms out in a ReliableCheckpointRDD
-      val lineage = df.queryExecution.toRdd.toDebugString
-      assert(lineage.contains("ReliableCheckpointRDD"), lineage)
-      assert(df.collect().map(_.getLong(1)).sorted.toSeq ==
-        (0L until 10L).map(_ * 2))
-    }
+    val df = Tables.mat(spark.range(10).toDF("v")
+      .withColumn("w", col("v") * 2))
+    // a locally-checkpointed frame scans executor-local blocks, so its RDD
+    // lineage bottoms out in a LocalCheckpointRDD, not the range scan
+    val lineage = df.queryExecution.toRdd.toDebugString
+    assert(lineage.contains("LocalCheckpointRDD"), lineage)
+    assert(!lineage.contains("RangeExec") && !lineage.contains("Range"),
+      lineage)
+    assert(df.collect().map(_.getLong(1)).sorted.toSeq ==
+      (0L until 10L).map(_ * 2))
   }
 }

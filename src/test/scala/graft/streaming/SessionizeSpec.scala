@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 import graft.SparkSpec
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
@@ -9,30 +10,24 @@ class SessionizeSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  /** transformWithState requires the RocksDB provider; set it (and one
-    * shuffle partition — each micro-batch commits one RocksDB store per
-    * partition, and without the native Hadoop lib each commit forks
-    * chmod processes per store file) around the streamed section only,
-    * restoring whatever the suite session had.
+  /** transformWithState requires the RocksDB provider; the streamed
+    * section runs on a session of its own with that provider and one
+    * shuffle partition (each micro-batch commits one RocksDB store per
+    * partition, and without the native Hadoop lib each commit forks chmod
+    * processes per store file), so the suite session is never changed.
     */
-  private def withTwsSession[T](body: => T): T = {
-    val pk = "spark.sql.streaming.stateStore.providerClass"
-    val sk = "spark.sql.shuffle.partitions"
-    val prevP = spark.conf.getOption(pk)
-    val prevS = spark.conf.get(sk)
-    spark.conf.set(pk, "org.apache.spark.sql.execution.streaming.state" +
-      ".RocksDBStateStoreProvider")
-    spark.conf.set(sk, "1")
-    try body
-    finally {
-      prevP.fold(spark.conf.unset(pk))(v => spark.conf.set(pk, v))
-      spark.conf.set(sk, prevS)
-    }
+  private def withTwsSession[T](body: SparkSession => T): T = {
+    val own = spark.newSession()
+    own.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state" +
+        ".RocksDBStateStoreProvider")
+    own.conf.set("spark.sql.shuffle.partitions", "1")
+    body(own)
   }
 
-  test("transformWithState closes sessions on 30-min gaps")(withTwsSession {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
+  test("transformWithState closes sessions on 30-min gaps")(withTwsSession { s =>
+    implicit val sqlCtx = s.sqlContext
+    import s.implicits._
     val input = MemoryStream[Sessionize.Event]
     // user 1: two events 5 min apart, then a 2-hour gap, then one more —
     // the gap closes session 1 within the stream itself
@@ -54,7 +49,7 @@ class SessionizeSpec extends SparkSpec {
     input.addData(Sessionize.Event(9L, 100L, ts("2024-01-01 15:00:01")))
     query.processAllAvailable()
     query.stop()
-    val closed = spark.table("sessions")
+    val closed = s.table("sessions")
       .as[Sessionize.SessionOut].collect()
     // user 1: the gap emitted session 1; the timer emitted session 2
     val u1 = closed.filter(_.user_id == 1L).sortBy(_.session_start.getTime)
@@ -69,9 +64,9 @@ class SessionizeSpec extends SparkSpec {
     assert(u2.head.session_end == ts("2024-01-01 10:00:00"))
   })
 
-  test("late in-window event does not regress session end")(withTwsSession {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
+  test("late in-window event does not regress session end")(withTwsSession { s =>
+    implicit val sqlCtx = s.sqlContext
+    import s.implicits._
     val input = MemoryStream[Sessionize.Event]
     val query = Sessionize.sessionizeStream(input.toDS())
       .writeStream.format("memory").queryName("late_sessions")
@@ -93,7 +88,7 @@ class SessionizeSpec extends SparkSpec {
     input.addData(Sessionize.Event(7L, 5L, ts("2024-01-01 13:00:00")))
     query.processAllAvailable()
     query.stop()
-    val closed = spark.table("late_sessions")
+    val closed = s.table("late_sessions")
       .as[Sessionize.SessionOut].collect().filter(_.user_id == 7L)
     assert(closed.length == 1, s"session spuriously split: ${closed.toSeq}")
     assert(closed.head.n_events == 4)
