@@ -8,7 +8,7 @@ import graft.functions.{BigramLmStats, BigramRepStats, CharEntropyStats, Collect
 /** Engine extensions, activated with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` (done by
   * `Tables.configure`) — the public registration path for custom Catalyst
-  * expressions.
+  * expressions and for [[BindFilterConstants]], the one physical rule.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -40,6 +40,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       messageParameters = Map("errorMessage" -> msg))
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectColumnar(_ => BindFilterConstants.Columnar)
     ext.injectFunction((
       new FunctionIdentifier("vec_dot"),
       new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),

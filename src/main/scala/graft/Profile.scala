@@ -36,18 +36,23 @@ object Profile {
           Tables.embeddings(s, d), nLists = 8)))
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt
     val explain = sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")
-    // SPARK_GRAFT_JOBS=1: count Spark jobs per query invocation. At bench
-    // scale many sub-second rows are job-scheduling-floor-bound (the
-    // 8-core ≈ 32-core scaling block), so job count per row is the
-    // direct measure of materialization overhead the wall clock hides.
-    val countJobs = sys.env.get("SPARK_GRAFT_JOBS").contains("1")
+    // Spark jobs per query invocation: at bench scale many sub-second rows
+    // are job-scheduling-floor-bound (the 8-core ≈ 32-core scaling block),
+    // so job count per row is the direct measure of materialization
+    // overhead the wall clock hides. Classes compiled and Janino seconds
+    // sit beside it: a warm rep that still compiles has outgrown the
+    // codegen cache or inlines a per-call constant.
     val jobs = new java.util.concurrent.atomic.AtomicInteger
-    if (countJobs) spark.sparkContext.addSparkListener(
+    spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(
             js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
           jobs.incrementAndGet()
       })
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    def compileNanos = org.apache.spark.sql.catalyst.expressions.codegen
+      .CodeGenerator.compileTime
     names.foreach { n =>
       val fn = devFrames.getOrElse(n, SparkEntry.queries(n))
       if (explain) {
@@ -58,14 +63,15 @@ object Profile {
         println(fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
       } else (1 to reps).foreach { r =>
-        if (countJobs) { Thread.sleep(200); jobs.set(0) }
+        Thread.sleep(200); jobs.set(0)
+        val (c0, n0) = (compiles, compileNanos)
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val secs = (System.nanoTime() - t0) / 1e9
-        if (countJobs) {
-          Thread.sleep(200) // listener bus drains async; dev tool only
-          println(f"$n%-24s rep$r $secs%8.2f s  jobs=${jobs.get}")
-        } else println(f"$n%-24s rep$r $secs%8.2f s")
+        Thread.sleep(200) // listener bus drains async; dev tool only
+        val compileSecs = (compileNanos - n0) / 1e9
+        println(f"$n%-24s rep$r $secs%8.2f s  jobs=${jobs.get}  " +
+          f"compiled=${compiles - c0} ($compileSecs%.2f s)")
         // same per-rep hygiene as Bench: leaked caches AND localCheckpoint
         // blocks would otherwise accumulate across reps and skew timings
         spark.catalog.clearCache()

@@ -141,9 +141,11 @@ object Tables {
     * default 200 — at 100 TB this is instead set to ~2-3× the executor core
     * count by the cluster conf), AQE for runtime coalescing/skew handling.
     * The tuning keys below (shuffle partitions, AQE, advisory size, open
-    * cost, SMJ preference) are local defaults: a deployment's `-D<key>` or
-    * `spark-submit --conf <key>=…` wins, the same precedence
-    * `spark.local.dir` gets.
+    * cost, SMJ preference, codegen cache size) are local defaults: a
+    * deployment's `-D<key>` or `spark-submit --conf <key>=…` wins, the
+    * same precedence `spark.local.dir` gets. The codegen cache is sized
+    * from a count, not a guess: the distinct classes the full sf0.1
+    * Verify board compiles, rounded up (see the comment at the key).
     */
   def configure(b: SparkSession.Builder, cpus: String): SparkSession.Builder = {
     // Scratch on tmpfs when the host has one (mirrors build.sbt's
@@ -224,6 +226,18 @@ object Tables {
     // exact results.
     .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
       (1 << 20).toString)
+    // Compiled whole-stage and projection classes live in one JVM-wide LRU
+    // keyed by generated source (and the compiling thread's class loader,
+    // so driver and task threads each hold an entry). Spark's 100 entries
+    // are fewer than one round of an energybench workload uses, so each
+    // round evicted its classes before their next use: a warm backfill
+    // landing recompiled 93 classes (1.7 s of Janino), a lake_ops day 123
+    // and a corpus_dedup round 304. The full sf0.1 Verify board compiles
+    // 2103 distinct classes with BindFilterConstants on; 2500 holds that
+    // working set. A static conf: it takes effect only when set before the
+    // JVM's first compile.
+    .config("spark.sql.codegen.cache.maxEntries",
+      sys.props.getOrElse("spark.sql.codegen.cache.maxEntries", "2500"))
     .config("spark.ui.enabled", "false")
   }
 }

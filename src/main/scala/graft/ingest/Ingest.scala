@@ -18,10 +18,13 @@ object Ingest {
     * `spark.sql.codegen.maxFields` (100; the I90 sheet has 131 columns)
     * runs `unpivot` as an interpreted Expand, which builds one generated
     * projection per value column in every task. Past 100 value columns
-    * those classes cycle through the 100-entry codegen cache
-    * (`spark.sql.codegen.cache.maxEntries`), so every task recompiles most
-    * of them. `inline(array(struct(name, value), …))` is one expression
-    * per row instead. The value type is the one `unpivot` resolves to (its
+    * those classes cycled through Spark's default 100-entry codegen cache
+    * (`spark.sql.codegen.cache.maxEntries`), so every task recompiled most
+    * of them; `Tables.configure` now sizes that cache to the engine's
+    * working set, where 126 projections would still cost 126 compiles per
+    * new sheet shape and a sixteenth of the cache.
+    * `inline(array(struct(name, value), …))` is one expression per row
+    * instead. The value type is the one `unpivot` resolves to (its
     * analyzer's wider type, without string promotion): the unpivot is only
     * analyzed for it, never run.
     */

@@ -97,12 +97,14 @@ object StreamingE2e {
     * unchanged). This mirrors the one-time-corpus-product rule the batch
     * families already follow (cluster labels, BPE merge tables): the e2e
     * row's claim is the STREAM's behavior, not the fixture copy. Dirs
-    * live under tmpfs for the JVM's lifetime; a landing that throws
-    * leaves no cache entry, so the next attempt re-lands cleanly into a
-    * fresh UUID dir.
+    * live under tmpfs for the JVM's lifetime and are deleted when it
+    * exits; a landing that throws leaves no cache entry, so the next
+    * attempt re-lands cleanly into a fresh UUID dir.
     */
   private val landedFixtures =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
+  sys.addShutdownHook(landedFixtures.values.forEach(d =>
+    org.apache.spark.network.util.JavaUtils.deleteQuietly(new java.io.File(d))))
   private val ttlBatches = new java.util.concurrent.ConcurrentHashMap[
     String, (Seq[TtlE2eEvent], Seq[TtlE2eEvent])]()
   private val spikeStats =

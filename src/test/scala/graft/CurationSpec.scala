@@ -238,7 +238,7 @@ class CurationSpec extends SparkSpec {
     // diagnosable error, never OOM the driver (r15 verdict ask #2). The
     // cap is injected small here so the test corpus stays tiny; the
     // production cap (2^20) is ~100× the web-text envelope.
-    val dir = java.nio.file.Files.createTempDirectory("graft_lm_cap").toString
+    val dir = tmpDir()
     spark.createDataFrame(Seq(
         (1L, "abcdefghij"),   // 9 distinct bigrams
         (2L, "qrstuvwxyz")))  // 9 more — 18 total, over an 8-cap

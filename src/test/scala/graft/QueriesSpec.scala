@@ -155,7 +155,7 @@ class QueriesSpec extends SparkSpec {
     // published dup_line_identity (a bare sum would skip the group and
     // silently undercount), and an unknown returnflag must appear in
     // a18's own output as a NULL-flag group, not merge into 'R'
-    val dir = java.nio.file.Files.createTempDirectory("graft_domain").toString
+    val dir = tmpDir()
     val li = Tables.lineitem(spark, sfDir).limit(8)
     li.withColumn("l_linenumber", lit(99))
       .unionByName(li)
